@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Pin an immutable relation hash-partitioned on the keys its consumers
   * iterate against — the cluster contract for iterative algorithms:
@@ -62,6 +62,21 @@ object Pinned {
       }
       df.checkpoint(eager = false)
     case _ => df.localCheckpoint(eager = false)
+  }
+
+  /** Release every pin and cached relation `spark` holds. Harnesses call
+    * it after each query execution: several queries pin blocks for
+    * intra-query reuse (`persist` / lazy pins) and nothing inside the
+    * query can release them, because the pin must outlive the query's own
+    * action. One JVM running hundreds of queries otherwise accumulates
+    * storage memory, which in round 7 slowed UNCHANGED queries up to 10×
+    * (q129 3.4 s → 35.5 s with an identical plan). Safe because
+    * every run rebuilds its DataFrame from scratch, so no later action
+    * re-reads these blocks. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Lazy localCheckpoint of `df` hash-partitioned on `keys`, with the

@@ -779,26 +779,29 @@ object Graph {
     * throughout (round-15): the seed join inherits the adjacency's
     * hash(node) placement, and each round's picks end in their own
     * groupBy(node) exchange carried through the anti-chain. */
+  /** The label domain of [[lpLayersUnion]]: suppliers of nations
+    * 0 until LpLabelK seed the labels, so per-node votes pack into
+    * LpLabelK counters. The Spark seed filter and the q294/q380 oracles
+    * both read it. */
+  private val LpLabelK = 5
+
   private def lpLayersUnion(s: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
     import s.implicits._
     val nodes = edges.select($"src".as("node"))
     val seeds = nodes.join(
-      Tables.supplier(s, dir).filter($"s_nationkey" < 5)
+      Tables.supplier(s, dir).filter($"s_nationkey" < LpLabelK)
         .select(($"s_suppkey" * 2 + 1).as("node"),
           $"s_nationkey".cast("long").as("label")),
       Seq("node"))
     var layers = List(graft.operators.Pinned.checkpointAsIs(seeds, "node"))
-    // The seed label domain is nations 0–4 (the `s_nationkey < 5` seed
-    // filter above) — FIXED, so per-node votes pack into 5 counters.
-    val LpLabelK = 5
     (1 to 3).foreach { round =>
       val frontier = layers.head
       // Round-20 vote packing (guide §2.3/§2.4 — the q290 value-array
       // move applied to votes): the (vnode, label) count + second
       // per-node struct-max fold paid TWO keyed aggregates (and two
       // exchanges) per round; with the bounded label domain, ONE
-      // vnode-keyed agg folds all 5 label counters map-side and the
+      // vnode-keyed agg folds all LpLabelK label counters map-side and the
       // majority pick becomes a per-row array_max over
       // struct(count, −label) — the IDENTICAL lexicographic tie rule
       // (counts per (vnode, label) are unchanged; a zero counter can
@@ -1457,7 +1460,7 @@ object Graph {
          |), l0 AS MATERIALIZED (
          |  SELECT n.node, CAST(s_nationkey AS BIGINT) AS label
          |  FROM nodes n JOIN supplier ON n.node = 's' || s_suppkey
-         |  WHERE s_nationkey < 5
+         |  WHERE s_nationkey < $LpLabelK
          |), ${lpRoundSql(1)}, ${lpRoundSql(2)}, ${lpRoundSql(3)},
          |deg AS (
          |  SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
@@ -1513,7 +1516,7 @@ object Graph {
          |), l0 AS MATERIALIZED (
          |  SELECT n.node, CAST(s_nationkey AS BIGINT) AS label
          |  FROM nodes n JOIN supplier ON n.node = 's' || s_suppkey
-         |  WHERE s_nationkey < 5
+         |  WHERE s_nationkey < $LpLabelK
          |), ${lpRoundSql(1)}, ${lpRoundSql(2)}, ${lpRoundSql(3)}
          |SELECT kind, label, n_nodes FROM (
          |  SELECT substr(node, 1, 1) AS kind, label, count(*) AS n_nodes

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.operators.{Pinned, TextOps, TwoPass, VectorOps}
+import graft.operators.{Fixpoint, Pinned, TextOps, TwoPass, VectorOps}
 import Portable._
 
 /** LLM-data-pipeline operators (north-star mandate): dedup (exact, MinHash-
@@ -826,36 +826,25 @@ object LlmOps {
     * minimum doc_id (so a keep-one-per-cluster policy is `doc_id == lab`).
     * Output: one row per multi-doc cluster with its sorted member list.
     *
-    * Algorithm: iterative min-label propagation to the unique fixpoint —
-    * label(v) ← min over {v} ∪ neighbors(v) of label; each round is one
-    * shuffled join+agg over the EDGE list (candidate pairs only, df-capped
-    * by the band scheme — never the corpus). The driver-side work per round
-    * is a single scalar (sum of labels as decimal(38,0): monotone decreasing
-    * and wrap-free — a BIGINT sum would silently wrap at the doc-id
-    * cardinalities a 100 TB corpus carries, and a wrapped "increase" would
-    * exit the loop before the fixpoint with wrong labels and no error)
-    * used as the convergence test; rounds ≤ component diameter,
-    * which for LSH bucket graphs is tiny (members of a bucket form a
-    * clique, so chains only arise across buckets). At true 100 TB scale
-    * with adversarial long chains you'd switch the iteration body to
-    * large-star/small-star contraction (O(log n) rounds, same fixpoint,
-    * same join/agg primitives); the declared formulation keeps the
-    * per-round plan identical and the fixpoint IS the oracle-checked
-    * contract. Lineage is cut per round with localCheckpoint so the plan
-    * does not deepen with iteration count. */
+    * Algorithm: [[Fixpoint.minLabels]] over the EDGE list (candidate
+    * pairs only, df-capped by the band scheme — never the corpus); rounds
+    * ≤ component diameter, which for LSH bucket graphs is tiny (members
+    * of a bucket form a clique, so chains only arise across buckets). The
+    * fixpoint IS the oracle-checked contract. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     dedupLabels(s, dir)
       .groupBy($"lab".as("cluster_id"))
       .agg(
         count(lit(1)).as("n_docs"),
-        concat_ws(",", sort_array(collect_list($"doc"))).as("members"))
+        concat_ws(",", sort_array(collect_list($"node"))).as("members"))
       .filter($"n_docs" >= 2)
       .orderBy($"cluster_id")
   }
 
-  /** The (doc, lab) fixpoint of [[dedupClusters]]'s min-label propagation,
-    * shared by the cluster census (q76) and survivorship (q174). */
+  /** The (node, lab) fixpoint of [[dedupClusters]]'s min-label propagation,
+    * shared by the cluster census (q76), survivorship (q174) and the
+    * leakage-safe split (q328). */
   private def dedupLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // ONE explicit repartition on the bucket key so both self-join sides
@@ -864,46 +853,16 @@ object LlmOps {
     val keyed = lshKeyed(s, dir).repartition($"band", $"bkey")
     val a = keyed.select($"doc_id".as("sa"), $"band", $"bkey")
     val b = keyed.select($"doc_id".as("ta"), $"band".as("band2"), $"bkey".as("bkey2"))
-    // directed both ways + self-loops: label(src) = min over dst of label(dst).
-    // pairs is materialized once (localCheckpoint); nodes/edges/iterations
-    // all read the materialized pair list, never the digest pipeline.
-    val pairs = a.join(b, $"band" === $"band2" && $"bkey" === $"bkey2" && $"sa" =!= $"ta")
-      .select($"sa".as("src"), $"ta".as("dst")).distinct()
-      .localCheckpoint(eager = false) // the first labelSum materializes it
+    // directed both ways + self-loops. pairs is pinned once (the first
+    // label-sum gate materializes it); nodes/edges/iterations all read
+    // the pinned pair list, never the digest pipeline.
+    val pairs = Pinned.pin(
+      a.join(b, $"band" === $"band2" && $"bkey" === $"bkey2" && $"sa" =!= $"ta")
+        .select($"sa".as("src"), $"ta".as("dst")).distinct())
     val nodes = pairs.select($"src").distinct()
-    val ed = pairs.unionByName(nodes.select($"src", $"src".as("dst")))
-    // LAZY pins (optimization-round rework): the eager checkpoint paid
-    // two actions per round — materialization plus the label-sum gate.
-    // With a lazy pin the labelSum job itself materializes the round's
-    // labels (the q345 loop's one-job-per-round shape); every later
-    // reader hits the pinned blocks. (An Observation-metric fusion of
-    // the sum into the checkpoint job was measured SLOWER — the
-    // listener-bus delivery lags each round by ~100 ms. So was the r20
-    // keyed-pin alignment of ed/labels via the Pinned helpers — their
-    // AQE-off subplan compile ran every per-round stage at the static
-    // 32-partition width, 10×+ the task time; see dbscanCensus.)
-    var labels = nodes.select($"src".as("doc"), $"src".as("lab"))
-      .localCheckpoint(eager = false)
-    // coalesce: sum over an EMPTY label set (a corpus with zero LSH
-    // collisions) is null, and a bare getDecimal would NPE before the loop
-    // even decides it has nothing to do. decimal(38,0) holds up to ~10^19
-    // max-long labels without wrapping; BIGINT wraps at ~10 of them.
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(
-        org.apache.spark.sql.functions.sum($"lab".cast("decimal(38,0)")),
-        lit(BigDecimal(0)).cast("decimal(38,0)")))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var sum = labelSum()
-    while (prevSum == null || sum.compareTo(prevSum) < 0) {
-      labels = ed.join(labels, $"dst" === $"doc")
-        .groupBy($"src").agg(min($"lab").as("lab"))
-        .select($"src".as("doc"), $"lab")
-        .localCheckpoint(eager = false) // one job per round: the labelSum
-      prevSum = sum
-      sum = labelSum()
-    }
-    labels
+    Fixpoint.minLabels(
+      pairs.unionByName(nodes.select($"src", $"src".as("dst"))),
+      nodes.select($"src".as("node"), $"src".as("lab")))
   }
 
   /** Cluster SURVIVORSHIP — the keep-one policy applied to q76's near-dup
@@ -922,13 +881,13 @@ object LlmOps {
     val members = labels.join(sizes, "lab")
       .join(Tables.documents(s, dir)
           .select($"doc_id", length($"text").cast("long").as("len")),
-        $"doc" === $"doc_id")
-    val w = Window.partitionBy($"lab").orderBy($"len".desc, $"doc".asc)
+        $"node" === $"doc_id")
+    val w = Window.partitionBy($"lab").orderBy($"len".desc, $"node".asc)
     members
       .withColumn("rn", row_number().over(w))
       .groupBy($"lab".as("cluster_id"))
       .agg(
-        max(when($"rn" === 1, $"doc")).as("survivor_doc"),
+        max(when($"rn" === 1, $"node")).as("survivor_doc"),
         max(when($"rn" === 1, $"len")).as("survivor_len"),
         max($"n_docs").as("n_docs"),
         (max($"n_docs") - 1L).as("n_removed"))
@@ -5624,38 +5583,10 @@ object LlmOps {
     * unmaterialized chain re-derives vocab_k exponentially). */
   def bpeMergeLoop(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    var vocab = bpeVocab(s, dir)
-    val out = Seq.newBuilder[(Int, String, String, Long, Long)]
-    // Round-20 gate fusion (guide §1.2 step 2 — the loop is job-latency
-    // bound, ~1-row gates over a ~50-row vocab): round k's symbol census
-    // and round k+1's top pair BOTH read the merged vocab, so they ride
-    // ONE crossJoin'd 1-row action instead of two — halving the driver
-    // gates per round (the values collected are unchanged: the fused row
-    // is exactly (nSyms_k, top_{k+1}), and an empty pair census surfaces
-    // as NULL top columns = the old empty-collect exhaustion). The merged
-    // vocab is lazily pinned so the gate's two subtrees and the next
-    // round's merge read one computed copy.
-    var top = bpeTopPair(bpePairCounts(vocab)).collect()
-      .headOption.map(r => (r.getString(0), r.getLong(1)))
-    var k = 1
-    while (k <= BpeLoopRounds && top.isDefined) {
-      val (pair, cnt) = top.get
-      val merged = pair.replace(" ", "")
-      vocab = vocab.select($"w", $"freq",
-        replace($"seg", lit(" " + pair.replace(" ", "  ") + " "),
-          lit(s" $merged ")).as("seg"))
-        .localCheckpoint(eager = false)
-      val g = vocab
-        .select(explode(split(trim($"seg"), "  ")).as("sym"))
-        .agg(countDistinct($"sym").as("n_syms"))
-        .join(bpeTopPair(bpePairCounts(vocab)), lit(true), "left")
-        .collect()(0) // the round's ONE driver gate
-      out += ((k, pair, merged, cnt, g.getLong(0)))
-      top = if (g.isNullAt(1)) None
-            else Some((g.getString(1), g.getLong(2)))
-      k += 1
-    }
-    out.result().toDF("round", "pair", "merged", "cnt", "vocab_syms")
+    Fixpoint.greedyMerges(bpeVocab(s, dir), BpeLoopRounds,
+        v => bpeTopPair(bpePairCounts(v)))
+      .map(m => (m.round, m.pair, m.merged, m.top.getLong(1), m.vocabSyms))
+      .toDF("round", "pair", "merged", "cnt", "vocab_syms")
       .orderBy($"round")
   }
 
@@ -5882,8 +5813,6 @@ object LlmOps {
   def wordpieceMergeLoop(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    var vocab = bpeVocab(s, dir)
-    val out = Seq.newBuilder[(Int, String, String, Long, Long, Long, Long)]
     // the round's likelihood-ratio argmax over a vocab `v` — the ≤1-row
     // frame of (pair, cnt, fa, fb); see the DEPTH CAP note above for the
     // O(P²) anti-join bound
@@ -5909,34 +5838,9 @@ object LlmOps {
           "left_anti")
         .select($"pair", $"cnt", $"fa", $"fb")
     }
-    // Round-20 gate fusion (the q329 move): round k's symbol census and
-    // round k+1's argmax ride ONE 1-row action — same collected values,
-    // half the driver gates; NULL top columns = the old empty-collect
-    // exhaustion. The merged vocab is lazily pinned for the gate's two
-    // subtrees and the next round's merge.
-    var top = wpTop(vocab).collect()
-      .headOption.map(r => (r.getAs[String]("pair"), r.getAs[Long]("cnt"),
-        r.getAs[Long]("fa"), r.getAs[Long]("fb")))
-    var k = 1
-    while (k <= WpLoopRounds && top.isDefined) {
-      val (pair, cnt, fa, fb) = top.get
-      val merged = pair.replace(" ", "")
-      vocab = vocab.select($"w", $"freq",
-        replace($"seg", lit(" " + pair.replace(" ", "  ") + " "),
-          lit(s" $merged ")).as("seg"))
-        .localCheckpoint(eager = false)
-      val g = vocab
-        .select(explode(split(trim($"seg"), "  ")).as("sym"))
-        .agg(countDistinct($"sym").as("n_syms"))
-        .join(wpTop(vocab), lit(true), "left")
-        .collect()(0) // the round's ONE driver gate
-      out += ((k, pair, merged, cnt, fa, fb, g.getLong(0)))
-      top = if (g.isNullAt(1)) None
-            else Some((g.getAs[String]("pair"), g.getAs[Long]("cnt"),
-              g.getAs[Long]("fa"), g.getAs[Long]("fb")))
-      k += 1
-    }
-    out.result()
+    Fixpoint.greedyMerges(bpeVocab(s, dir), WpLoopRounds, wpTop)
+      .map(m => (m.round, m.pair, m.merged, m.top.getLong(1), m.top.getLong(2),
+        m.top.getLong(3), m.vocabSyms))
       .toDF("round", "pair", "merged", "cnt", "fa", "fb", "vocab_syms")
       .withColumn("score", $"cnt".cast("double") /
         ($"fa".cast("double") * $"fb".cast("double")))
@@ -6996,7 +6900,7 @@ object LlmOps {
     def dig(c: Column): Column =
       conv(substring(md5(c.cast("string")), 1, 10), 16, 10).cast("long")
     val full = Tables.documents(s, dir).select($"doc_id")
-      .join(dedupLabels(s, dir), $"doc_id" === $"doc", "left")
+      .join(dedupLabels(s, dir), $"doc_id" === $"node", "left")
       .select($"doc_id", coalesce($"lab", $"doc_id").as("lab"))
       .withColumn("naive_test", dig(concat(lit("split:"), $"doc_id")) % 10 === 0)
       .withColumn("aware_test", dig(concat(lit("split:"), $"lab")) % 10 === 0)
@@ -7478,50 +7382,19 @@ object LlmOps {
       .localCheckpoint(eager = false) // read by cores + non-cores
     val cores = deg.filter($"nn" >= DbscanMinPts).select($"ia".as("v"))
       .localCheckpoint(eager = false)
-    // NEGATIVE RESULT (r20, kept as documentation): pinning coreEdges and
-    // the per-round labels HASH-PLACED on the join keys (Pinned helpers)
-    // to make each round's join exchange-free was measured 2.5–3.5×
-    // SLOWER end to end (q345 5.4→13.2 s, q361 5.9→18.3 s; task time
-    // 2→277 s / 5→354 s): the Pinned helpers compile their subplan with
-    // AQE OFF, so every per-round stage ran at the static 32-partition
-    // width instead of AQE-coalescing to ~1 task — per-task overhead
-    // swamped the saved exchanges. Keyed pins pay off for ONE-TIME
-    // corpus-scale relations (adjacency builds), not for tiny per-round
-    // iterates; these stay plain lazy localCheckpoints.
-    val coreEdges = nbr
+    // core-core edges as (src, dst); nbr carries each core's self-pair
+    val coreEdges = Pinned.pin(nbr
       .join(broadcast(cores.select($"v".as("ia"))), Seq("ia"), "semi")
       .join(broadcast(cores.select($"v".as("ib"))), Seq("ib"), "semi")
-      .localCheckpoint(eager = false) // read every fixpoint round
-    var labels = cores.select($"v".as("doc"), $"v".as("lab"))
-      .localCheckpoint(eager = false) // materialized by the first labelSum
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(sum($"lab".cast(DecimalType(38, 0))),
-        lit(BigDecimal(0)).cast(DecimalType(38, 0))))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var curSum = labelSum()
-    while (prevSum == null || curSum.compareTo(prevSum) < 0) {
-      val propagated = coreEdges.join(labels, $"ib" === $"doc")
-        .groupBy($"ia").agg(min($"lab").as("lab"))
-        .select($"ia".as("doc"), $"lab")
-      // pointer jump: labels are core ids, always present as docs
-      // (a second jump per round was measured SLOWER — the extra
-      // intermediate pin costs more than the ~3 saved rounds; so was an
-      // Observation-metric fusion of the sum into the checkpoint job —
-      // listener-bus delivery lags each round by ~100 ms)
-      labels = propagated.as("l")
-        .join(propagated.select($"doc".as("ld"), $"lab".as("ll")).as("r"),
-          col("l.lab") === col("r.ld"))
-        .select(col("l.doc").as("doc"), col("r.ll").as("lab"))
-        .localCheckpoint(eager = false) // one job per round: the labelSum
-      prevSum = curSum
-      curSum = labelSum()
-    }
+      .select($"ia".as("src"), $"ib".as("dst"))) // read every fixpoint round
+    // labels are core ids, always present as nodes: the jump holds
+    val labels = Fixpoint.minLabels(coreEdges,
+      cores.select($"v".as("node"), $"v".as("lab")), pointerJump = true)
     val border = nbr
       .join(broadcast(deg.filter($"nn" < DbscanMinPts).select($"ia")),
         Seq("ia"), "semi")
       .join(broadcast(cores.select($"v".as("ib"))), Seq("ib"), "semi")
-      .join(labels, $"ib" === $"doc")
+      .join(labels, $"ib" === $"node")
       .groupBy($"ia").agg(min($"lab").as("lab"))
     val cc = labels.groupBy($"lab").agg(count(lit(1)).as("n_core"))
     val bc = border.groupBy($"lab").agg(count(lit(1)).as("n_border"))

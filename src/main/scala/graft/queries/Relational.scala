@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.Tables
 import Portable._
@@ -1662,29 +1662,22 @@ object Relational {
     // 1-row verdicts concurrently (eager 1-row pins); the returned frame
     // unions the pinned rows. All work stays inside this invocation —
     // nothing is reused across runs.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val perPair =
-      try {
-        def runAll[T](tasks: Seq[() => T]): Seq[T] = {
-          val futs = tasks.map(t => pool.submit(
-            new java.util.concurrent.Callable[T] { def call(): T = t() }))
-          // every future is awaited (Try) before the first failure is
-          // rethrown, so no job is left running when this method exits
-          futs.map(f => scala.util.Try(f.get())).map(_.get)
-        }
-        runAll(distincts.values.toSeq.map(df => () => {
-          s.sparkContext.setJobDescription("q303: column distinct pin")
-          df.write.mode("overwrite").format("noop").save()
-        }))
-        runAll(perPairLazy.map { case (an, bn, v) => () => {
-          s.sparkContext.setJobDescription(s"q303: verdict $an vs $bn")
-          v.localCheckpoint() // eager 1-row pin
-        }})
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES): Unit
+    graft.operators.Pool.runAll(4)(distincts.values.toSeq.map(df => () => {
+      s.sparkContext.setJobDescription("q303: column distinct pin")
+      df.write.mode("overwrite").format("noop").save()
+    }))
+    val perPair = graft.operators.Pool.runAll(4)(perPairLazy.map {
+      case (an, bn, v) => () => {
+        s.sparkContext.setJobDescription(s"q303: verdict $an vs $bn")
+        v.localCheckpoint() // eager 1-row pin
       }
-    perPair.reduce(_ unionAll _).orderBy($"col_a", $"col_b")
+    })
+    // an empty screen (no joinable pair) verifies nothing: zero verdicts
+    perPair.reduceOption(_ unionAll _)
+      .getOrElse(s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        StructType.fromDDL("col_a STRING, col_b STRING, n_a BIGINT, " +
+          "n_b BIGINT, a_not_in_b BIGINT, b_not_in_a BIGINT, relation STRING")))
+      .orderBy($"col_a", $"col_b")
   }
 
   /** Incremental materialized-view maintenance with RETRACTIONS — the
@@ -2019,43 +2012,17 @@ object Relational {
     val matched = classed.filter($"link_class" === "match")
       .select($"id_a".as("src"), $"id_b".as("dst"))
     // min-label propagation to the fixpoint over matched records only
-    // (q76's loop: decimal label sum is the convergence gate — monotone
-    // decreasing, wrap-free at any key cardinality)
-    val pairs = matched
+    val pairs = graft.operators.Pinned.pin(matched
       .unionAll(matched.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .localCheckpoint(eager = false) // the first labelSum materializes it
+      .distinct())
     val nodes = pairs.select($"src").distinct()
-    val ed = pairs.unionByName(nodes.select($"src", $"src".as("dst")))
-    // LAZY pins (optimization-round rework): the eager checkpoint paid
-    // two actions per round — materialization plus the label-sum gate;
-    // with a lazy pin the labelSum job itself materializes the round's
-    // labels (the q345 loop's one-job-per-round shape). An Observation-
-    // metric fusion was measured SLOWER (listener-bus lag per round), and
-    // so was the r20 keyed-pin alignment of ed/labels (Pinned helpers):
-    // their AQE-off subplan compile ran every per-round stage at the
-    // static 32-partition width — measured 3.9→5.8 s / task 3.4→29.9 s
-    // on this query; see dbscanCensus for the full negative result.
-    var labels = nodes.select($"src".as("rec"), $"src".as("lab"))
-      .localCheckpoint(eager = false)
-    def labelSum(): java.math.BigDecimal = labels
-      .agg(coalesce(sum($"lab".cast(DecimalType(38, 0))),
-        lit(BigDecimal(0)).cast(DecimalType(38, 0))))
-      .head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var curSum = labelSum()
-    while (prevSum == null || curSum.compareTo(prevSum) < 0) {
-      labels = ed.join(labels, $"dst" === $"rec")
-        .groupBy($"src").agg(min($"lab").as("lab"))
-        .select($"src".as("rec"), $"lab")
-        .localCheckpoint(eager = false) // one job per round: the labelSum
-      prevSum = curSum
-      curSum = labelSum()
-    }
+    val labels = graft.operators.Fixpoint.minLabels(
+      pairs.unionByName(nodes.select($"src", $"src".as("dst"))),
+      nodes.select($"src".as("node"), $"src".as("lab")))
     // every record gets an entity: its component label, or itself
     val ents = Tables.customer(s, dir)
       .select($"c_custkey", $"c_name", cents($"c_acctbal").as("bal_c"))
-      .join(labels, $"c_custkey" === $"rec", "left")
+      .join(labels, $"c_custkey" === $"node", "left")
       .withColumn("ent", coalesce($"lab", $"c_custkey"))
     val w = Window.partitionBy($"ent")
       .orderBy(length($"c_name").desc, $"c_custkey".asc)

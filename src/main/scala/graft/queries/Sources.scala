@@ -639,29 +639,14 @@ object Sources {
           .cast("int"))
       .select($"l_partkey", $"l_suppkey", $"pc", $"fO", $"fP", $"fZ")
       .localCheckpoint() // EAGER on purpose: see extents pin above
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      val futs = Seq("linear" -> "fO", "range" -> "fP", "zorder" -> "fZ").map {
-        case (name, fidCol) =>
-          pool.submit(new Runnable {
-            def run(): Unit =
-              cells.select($"l_partkey", $"l_suppkey", $"pc",
-                  col(fidCol).as("fid"))
-                .repartition(col("fid")) // one task per fid → one file per dir
-                .write.mode("overwrite").partitionBy("fid")
-                .parquet(s"$out/$name")
-          })
-      }
-      // collect EVERY future's outcome before rethrowing (advice r19):
-      // failing fast on the first bad future would leave sibling writes
-      // running when this method exits, racing whatever runs next
-      // (including a retry's overwrite of the same paths)
-      val errs = futs.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-      errs.headOption.foreach(e => throw e)
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES): Unit
-    }
+    graft.operators.Pool.runAll(3)(
+      Seq("linear" -> "fO", "range" -> "fP", "zorder" -> "fZ").map {
+        case (name, fidCol) => () =>
+          cells.select($"l_partkey", $"l_suppkey", $"pc", col(fidCol).as("fid"))
+            .repartition(col("fid")) // one task per fid → one file per dir
+            .write.mode("overwrite").partitionBy("fid")
+            .parquet(s"$out/$name")
+      })
     val readBack = Seq("linear", "range", "zorder")
       .map(n => s.read.parquet(s"$out/$n").withColumn("layout", lit(n)))
       .reduce(_.unionByName(_))
