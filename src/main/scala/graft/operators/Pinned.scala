@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftPlanBridgeImpl
 
 /** Pin an immutable relation hash-partitioned on the keys its consumers
   * iterate against — the cluster contract for iterative algorithms:
@@ -26,42 +27,45 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Pinned {
 
-  /** FAULT TOLERANCE AT SCALE (verdict r19 item): a LOCAL checkpoint
-    * truncates lineage — the pinned blocks live only in executor
-    * storage, so on a real cluster an executor loss mid-query kills the
-    * job instead of recomputing (Spark logs exactly that warning at
-    * every pin). That is the right default trade here: the pins exist
-    * to stop corpus-sized re-scans and re-shuffles inside ONE query,
-    * and the bench/Verify harness is single-process. A 100 TB
-    * deployment that needs executor-loss survival sets
-    * `SPARK_GRAFT_PIN_MODE=reliable` (and a durable
-    * `sparkContext.setCheckpointDir`, e.g. an object-store path via
-    * `SPARK_GRAFT_CHECKPOINT_DIR`): every pin then writes through the
-    * reliable checkpoint path — same plan shape, same recorded
-    * partitioning, recomputable after any loss, at the cost of one
-    * distributed-FS round trip per pin. Pin SIZE is bounded by the
-    * callers: every pinned relation is either census/vocabulary-sized
-    * or one |V|/|E|-row iterate of a loop — never a multiple of the
-    * corpus (the corpus-sized ensemble base pins toks+digests once
-    * INSTEAD of seven corpus scans; that trade is documented at its
-    * call site). */
-  private def pinMode: String =
-    sys.env.getOrElse("SPARK_GRAFT_PIN_MODE", "local") match {
-      case m @ ("local" | "reliable") => m
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_PIN_MODE must be 'local' or 'reliable', got '$other'")
+  /** The pin of `df`: a checkpoint that truncates its lineage, so every
+    * consumer reads one materialization. Lazy by default, so plan-only
+    * consumers (explain audits, plan-assertion specs) never pay for it;
+    * `eager` mirrors Spark's own `localCheckpoint(eager)` and is chosen
+    * per call site.
+    *
+    * This is the one place the pin mode is decided, and it follows the
+    * deployment instead of a project setting: pins are RELIABLE exactly
+    * when the SparkContext has a checkpoint directory (Spark's own
+    * `spark.checkpoint.dir`, or `setCheckpointDir`), and LOCAL otherwise.
+    *   - Local (the harness default): the pinned blocks live only in
+    *     executor storage, so on a real cluster an executor loss
+    *     mid-query kills the job instead of recomputing (Spark logs that
+    *     warning at every pin). The pins exist to stop corpus-sized
+    *     re-scans and re-shuffles inside ONE query, and Bench/Verify are
+    *     single-process, so that is the right trade there.
+    *   - Reliable (a deployment that points the checkpoint dir at
+    *     durable storage): every pin is written there, survives executor
+    *     loss, and keeps the same plan shape and recorded partitioning,
+    *     at the cost of one distributed-FS write per pin. The frame is
+    *     persisted first, so Spark's checkpoint-write job reads the
+    *     cached blocks instead of recomputing the subtree; [[release]]
+    *     drops them between queries. The checkpoint files stay in the
+    *     directory unless Spark's
+    *     `spark.cleaner.referenceTracking.cleanCheckpoints` is on.
+    * Pin SIZE is bounded by the callers: every pinned relation is either
+    * census/vocabulary-sized or one |V|/|E|-row iterate of a loop —
+    * never a multiple of the corpus (the corpus-sized ensemble base pins
+    * toks+digests once INSTEAD of seven corpus scans; that trade is
+    * documented at its call site). */
+  def pin(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val spark = df.sparkSession
+    if (spark.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint(eager)
+    else {
+      df.persist()
+      // a fresh plan, so the checkpoint reads the cache just registered
+      GraftPlanBridgeImpl.ofRows(spark, df.queryExecution.analyzed)
+        .checkpoint(eager)
     }
-
-  /** Lazy checkpoint in the configured [[pinMode]] — the one place the
-    * local-vs-reliable decision lives. */
-  def pin(df: DataFrame): DataFrame = pinMode match {
-    case "reliable" =>
-      sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").foreach { d =>
-        if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-          df.sparkSession.sparkContext.setCheckpointDir(d)
-      }
-      df.checkpoint(eager = false)
-    case _ => df.localCheckpoint(eager = false)
   }
 
   /** Release every pin and cached relation `spark` holds. Harnesses call
@@ -79,29 +83,12 @@ object Pinned {
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** Lazy localCheckpoint of `df` hash-partitioned on `keys`, with the
-    * partitioning preserved in the pinned plan (see class doc). Lazy so
-    * plan-only consumers (explain audits, plan-assertion specs) never pay
-    * a materialization; the first action pins one copy for all readers.
-    *
-    * Concurrency: the AQE toggle is SESSION-GLOBAL for the duration of
-    * this (purely plan-side, sub-millisecond) call — a query compiled
-    * CONCURRENTLY on the same SparkSession during that window would
-    * silently compile without AQE. Verify/Bench compile queries
-    * sequentially, so this is safe today; a parallel harness must either
-    * serialize calls to this helper or hand it a cloned session
-    * (`spark.newSession()` shares the RDD state but scopes the conf).
-    */
-  def partitionedCheckpoint(df: DataFrame, keys: Column*): DataFrame = {
-    val spark = df.sparkSession
-    val aqe = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(aqe)
-    spark.conf.set(aqe, "false")
-    try pin(df.repartition(keys: _*))
-    finally spark.conf.set(aqe, prev)
-  }
+  /** Lazy [[pin]] of `df` hash-partitioned on `keys`, with the
+    * partitioning preserved in the pinned plan (see class doc). */
+  def partitionedCheckpoint(df: DataFrame, keys: Column*): DataFrame =
+    pinnedWithoutAqe(df)(d => pin(d.repartition(keys: _*)))
 
-  /** Lazy localCheckpoint that preserves the partitioning `df`'s plan
+  /** Lazy [[pin]] that preserves the partitioning `df`'s plan
     * ALREADY ends in — for frames whose last operator is a keyed
     * aggregation/shuffle on exactly the keys consumers want (e.g. a
     * `groupBy(src)` adjacency build): [[partitionedCheckpoint]] would
@@ -128,13 +115,9 @@ object Pinned {
       HashPartitioning, Partitioning, PartitioningCollection}
     require(keys.nonEmpty,
       "checkpointAsIs needs the consumer keys to verify the pin against")
-    val spark = df.sparkSession
-    val aqe = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(aqe)
-    spark.conf.set(aqe, "false")
-    try {
-      val exec = df.queryExecution.executedPlan
-      val resolver = spark.sessionState.analyzer.resolver
+    pinnedWithoutAqe(df) { d =>
+      val exec = d.queryExecution.executedPlan
+      val resolver = d.sparkSession.sessionState.analyzer.resolver
       val expected = keys.map { k =>
         exec.output.find(a => resolver(a.name, k)).getOrElse(
           throw new IllegalArgumentException(
@@ -157,7 +140,21 @@ object Pinned {
           s"HashPartitioning(${keys.mkString(", ")}) for consumers to " +
           s"reuse, got ${exec.outputPartitioning} — " +
           s"use partitionedCheckpoint(df, keys*) instead")
-      pin(df)
-    } finally spark.conf.set(aqe, prev)
+      pin(d)
+    }
+  }
+
+  /** `pinOf(df)` with `df` planned in a clone of its session that has AQE
+    * off (see class doc), handed back to the caller's session. The clone
+    * carries every conf of the caller's session, but the caller's own conf
+    * is never written, so jobs compiled concurrently on it (q303, q206)
+    * keep AQE, and so do the pin's consumers. */
+  private def pinnedWithoutAqe(df: DataFrame)(
+      pinOf: DataFrame => DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val scoped = GraftPlanBridgeImpl.cloneSession(spark)
+    scoped.conf.set("spark.sql.adaptive.enabled", "false")
+    val pinned = pinOf(GraftPlanBridgeImpl.ofRows(scoped, df.queryExecution.analyzed))
+    GraftPlanBridgeImpl.ofRows(spark, pinned.queryExecution.analyzed)
   }
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *   1. `repartitionByRange` on the order keys (range-partitioned sort —
   *      the scalable total-order primitive), stamp
   *      `spark_partition_id()`, and PIN the result with a lazy
-  *      `localCheckpoint`. The pin is load-bearing: `RangePartitioner`
+  *      [[Pinned.pin]]. The pin is load-bearing: `RangePartitioner`
   *      samples its boundaries per job, so without it the offsets job
   *      and the ranks job could observe DIFFERENT cuts and the offsets
   *      would not match the pids they are joined back to. With the pin,
@@ -44,19 +44,15 @@ import org.apache.spark.sql.functions._
   * value), so order statistics at a given position are well-defined even
   * under ties.
   *
-  * Fault-tolerance/footprint trade of the pin: `localCheckpoint` stores
-  * the partitions in executor-local block storage with lineage
-  * TRUNCATED — losing an executor mid-job makes its blocks
-  * unrecomputable and fails the job (no lineage replay), and the pinned
-  * copy holds a data-sized footprint (memory-and-disk) for the job's
-  * duration. That is the price of cut-placement invariance; it is the
-  * right default for the batch-query shape here (jobs are minutes, a
-  * retry re-runs the query). Long-running clusters with churny executors
-  * that cannot accept fail-and-retry should swap the pin for a RELIABLE
-  * `df.checkpoint()` against a durable `sparkContext.setCheckpointDir`
-  * location — same semantics (materialized cuts), survivable blocks,
-  * at the cost of a distributed-FS write. (Pinned.scala documents the
-  * same caveat for the iterate-against-an-edge-list shape.)
+  * Fault-tolerance/footprint trade of the pin: the pinned copy holds a
+  * data-sized footprint for the job's duration — the price of
+  * cut-placement invariance. Without a checkpoint directory it is a
+  * local checkpoint with lineage TRUNCATED, so losing an executor
+  * mid-job fails the job (a retry re-runs the query; right for the
+  * minutes-long batch shape here). A deployment that sets Spark's
+  * checkpoint directory to durable storage gets a reliable pin instead
+  * — same materialized cuts, survivable blocks, one distributed-FS
+  * write ([[Pinned.pin]] documents the mode).
   */
 object TwoPass {
 
@@ -128,11 +124,10 @@ object TwoPass {
     // wholesale, so arrival order IS the stored order and the window's
     // TimSort runs on presorted runs (sf10 soak: 13.7 s vs 15.2 s
     // without). Correctness needs only the PLACEMENT.
-    val parts = df
+    val parts = Pinned.pin(df
       .repartitionByRange(numParts, rangeKeys: _*)
       .sortWithinPartitions(rangeKeys: _*)
-      .withColumn(PID, spark_partition_id())
-      .localCheckpoint(eager = false)
+      .withColumn(PID, spark_partition_id()))
     // Per-(pid, group) partials → prefix offsets. The prefix window runs
     // over ≤ numParts rows per group — bounded by configuration, not data.
     val partialAggs = count(lit(1)).as(PN) +:

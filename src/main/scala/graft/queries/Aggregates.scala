@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.operators.TwoPass
+import graft.operators.{Pinned, TwoPass}
 import Portable._
 
 /** Aggregation surface (SURVEY.md §2.B): multi-measure hash agg, exact and
@@ -1083,7 +1083,7 @@ object Aggregates {
     // unpinned across this query's shared frames) — and the b-pin lands
     // the parent merge exchange-free. The pin is ≤16 384 cells/leaf —
     // the sketch IS the thing that ships, that's the operator's point.
-    val leaf = graft.operators.Pinned.partitionedCheckpoint(
+    val leaf = Pinned.partitionedCheckpoint(
       v.groupBy($"rf", shiftright($"pc", QsBucketBits).as("b"))
         .agg(count(lit(1)).as("c")),
       $"b")
@@ -1119,13 +1119,13 @@ object Aggregates {
     // bucket table — so no window ever rides an unbounded census (the
     // TwoPass offsets idea with the sketch's own buckets as the
     // deterministic cuts).
-    val exLeaf = graft.operators.Pinned.partitionedCheckpoint(
+    val exLeaf = Pinned.partitionedCheckpoint(
       v.groupBy($"rf", $"pc").agg(count(lit(1)).as("c")), $"pc")
     val exParent = exLeaf.groupBy($"pc").agg(sum($"c").as("c"))
     // pinned on (scope, b): consumed three times (bucket offsets, totals,
     // the within-bucket rank window) and the pin partitioning matches the
     // window/offset keys
-    val exCensus = graft.operators.Pinned.partitionedCheckpoint(
+    val exCensus = Pinned.partitionedCheckpoint(
       exLeaf.select($"rf".as("scope"), $"pc", $"c")
         .unionByName(exParent.select(lit("*").as("scope"), $"pc", $"c"))
         .withColumn("b", shiftright($"pc", QsBucketBits)),
@@ -1245,11 +1245,10 @@ object Aggregates {
       .groupBy($"o_custkey")
       .agg(count(lit(1)).as("n_orders"), sum(cents($"o_totalprice")).as("spend_cents"))
     val nParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = pts
+    val parts = Pinned.pin(pts
       .repartitionByRange(nParts, $"spend_cents".desc)
       .sortWithinPartitions($"spend_cents".desc)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(eager = false)
+      .withColumn("pid", spark_partition_id()))
     // prefix max over preceding (strictly richer) partitions: a window
     // over the ≤ numParts-row per-pid max table, then broadcast back.
     val offDf = parts.groupBy($"pid").agg(max($"n_orders").as("pmax"))
@@ -2301,10 +2300,9 @@ object Aggregates {
     import s.implicits._
     val d38 = DecimalType(38, 0)
     def bits(c: Column): Column = length(bin(c)).cast("long")
-    val census = Tables.orders(s, dir)
+    val census = Pinned.pin(Tables.orders(s, dir)
       .groupBy(cents($"o_totalprice").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // read by cums AND the excess fold
+      .agg(count(lit(1)).as("c"))) // read by cums AND the excess fold
     val cums = census
       .withColumn("cum", sum($"c").over(Window.orderBy($"v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -2503,9 +2501,9 @@ object Aggregates {
   def spearmanCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val cells = rankCells(s, dir)
-      .localCheckpoint(eager = false) // read by two marginals + the
-        // moment agg (lazy, r20: first reader materializes)
+    // read by two marginals + the moment agg (lazy, r20: first reader
+    // materializes)
+    val cells = Pinned.pin(rankCells(s, dir))
     def marg(keyCol: String, rankCol: String): DataFrame = {
       val w = Window.partitionBy($"l_returnflag").orderBy(col(keyCol))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2563,9 +2561,8 @@ object Aggregates {
   def kendallTau(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val cells = rankCells(s, dir)
-      .localCheckpoint(eager = false) // read by the pair join (both
-        // sides) + margins (lazy, r20)
+    // read by the pair join (both sides) + margins (lazy, r20)
+    val cells = Pinned.pin(rankCells(s, dir))
     val o = cells.select($"l_returnflag",
       $"q".as("oq"), $"d".as("od"), $"cnt".as("ocnt"))
     val pairSums = cells.join(broadcast(o), Seq("l_returnflag"))
@@ -2610,9 +2607,8 @@ object Aggregates {
     * census²-bounded and flag-keyed. */
   def ordinalAssocPanel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cells = rankCells(s, dir)
-      .localCheckpoint(eager = false) // read by the pair join (both
-        // sides) + margins (lazy, r20)
+    // read by the pair join (both sides) + margins (lazy, r20)
+    val cells = Pinned.pin(rankCells(s, dir))
     val o = cells.select($"l_returnflag",
       $"q".as("oq"), $"d".as("od"), $"cnt".as("ocnt"))
     val pairSums = cells.join(broadcast(o), Seq("l_returnflag"))
@@ -2671,13 +2667,12 @@ object Aggregates {
   def jonckheereTerpstra(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val cells = Tables.lineitem(s, dir)
+    val cells = Pinned.pin(Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_quantity".cast("long").as("v"))
       .join(Tables.orders(s, dir)
         .select($"o_orderkey".as("l_orderkey"), $"o_orderpriority".as("g")),
         Seq("l_orderkey"))
-      .groupBy($"g", $"v").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // pair sides + both margins (lazy, r20)
+      .groupBy($"g", $"v").agg(count(lit(1)).as("c"))) // pair sides + both margins (lazy, r20)
     val pairs = cells
       .join(broadcast(cells.select($"g".as("gb"), $"v".as("vb"),
         $"c".as("cb"))), $"g" < $"gb")
@@ -2744,19 +2739,17 @@ object Aggregates {
   def giniConcentration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val census = Tables.orders(s, dir)
+    val census = Pinned.pin(Tables.orders(s, dir)
       .groupBy($"o_custkey")
       .agg(sum(cents($"o_totalprice")).as("x"))
-      .groupBy($"x").agg(count(lit(1)).as("w"))
-      .localCheckpoint(eager = false) // read by both rank windows
+      .groupBy($"x").agg(count(lit(1)).as("w"))) // read by both rank windows
     val wAsc = Window.orderBy($"x".asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wDesc = Window.orderBy($"x".desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = census
+    val ranked = Pinned.pin(census
       .withColumn("cum_before", sum($"w").over(wAsc) - $"w")
-      .withColumn("cum_above", sum($"w").over(wDesc) - $"w")
-      .localCheckpoint(eager = false) // read by the moments + the top cut
+      .withColumn("cum_above", sum($"w").over(wDesc) - $"w")) // read by the moments + the top cut
     val g = ranked.agg(
       sum($"w").as("n"),
       sum($"w".cast(d38) * $"x").as("s"),
@@ -2804,9 +2797,8 @@ object Aggregates {
       .agg(count(lit(1)).as("w"))
     val wAsc = Window.partitionBy($"o_orderpriority").orderBy($"x".asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = census
-      .withColumn("cum_before", sum($"w").over(wAsc) - $"w")
-      .localCheckpoint(eager = false) // read by totals + the main agg
+    val ranked = Pinned.pin(census
+      .withColumn("cum_before", sum($"w").over(wAsc) - $"w")) // read by totals + the main agg
     val tot = ranked.groupBy($"o_orderpriority").agg(sum($"w").as("n"))
     val k = expr("n div 10")
     ranked.join(tot, "o_orderpriority")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Pinned
 import Portable._
 
 /** Iterative graph analytics beyond connected components (q76's label
@@ -34,7 +35,7 @@ import Portable._
   * table, NOT per edge) and one sum-by-destination — the standard
   * edge-partitioned PageRank plan, with the bounded iteration count fixed
   * in the PLAN (unrolled), not driver-looped. The edge list is built once
-  * and pinned (lazy localCheckpoint) because all three iterations and the
+  * and pinned (lazy Pinned.pin) because all three iterations and the
   * degree table read it.
   */
 object Graph {
@@ -66,7 +67,7 @@ object Graph {
     // |E|-row stream existing only after the explode. This is the
     // cluster contract: partition the big immutable relation once,
     // iterate against it.
-    val edges = graft.operators.Pinned.checkpointAsIs(
+    val edges = Pinned.checkpointAsIs(
       raw.unionAll(raw.select($"dst".as("src"), $"src".as("dst")))
         .groupBy($"src").agg(collect_set($"dst").as("dsts")), "src")
     val deg = edges.select($"src", size($"dsts").cast("long").as("d"))
@@ -164,11 +165,10 @@ object Graph {
     import s.implicits._
     val so = Tables.lineitem(s, dir)
       .select($"l_orderkey".as("ok"), $"l_suppkey".as("sp")).distinct()
-    val mult = so.select($"ok", $"sp".as("u"))
+    val mult = Pinned.pin(so.select($"ok", $"sp".as("u"))
       .join(so.select($"ok", $"sp".as("v")), "ok")
       .filter($"u" < $"v")
-      .groupBy($"u", $"v").agg(count(lit(1)).as("m"))
-      .localCheckpoint(eager = false) // read by Σm scalar + edge filter
+      .groupBy($"u", $"v").agg(count(lit(1)).as("m"))) // read by Σm scalar + edge filter
     // threshold = max(floor, ceil(Lift·λ)), λ = Σm / C(|V|,2) — two 1-row
     // scalars, exact long ceil-division, broadcast into the filter.
     val thr = mult.agg(sum($"m").as("slots"))
@@ -176,16 +176,15 @@ object Graph {
       .select(greatest(lit(CoOrderMinMult),
         coalesce(expr(s"(2 * $CoOrderLift * slots + nv * (nv - 1) - 1)" +
           " div nullif(nv * (nv - 1), 0)"), lit(CoOrderMinMult))).as("thr"))
-    val und = mult.crossJoin(broadcast(thr))
+    val und = Pinned.pin(mult.crossJoin(broadcast(thr))
       .filter($"m" >= $"thr") // sparse by construction: strong ties only
-      .select($"u", $"v")
-      .localCheckpoint(eager = false) // read by degs + orientation
+      .select($"u", $"v")) // read by degs + orientation
     val degs = und.select($"u".as("n")).unionAll(und.select($"v".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("deg"))
     // Pinned pre-partitioned on src (Pinned doc explains the AQE caveat):
     // both wedge-generation self-join sides key on src, so they read the
     // oriented edges exchange-free; only the closure probe re-keys.
-    val e = graft.operators.Pinned.partitionedCheckpoint(
+    val e = Pinned.partitionedCheckpoint(
       und
         .join(degs.select($"n".as("u"), $"deg".as("du")), "u")
         .join(degs.select($"n".as("v"), $"deg".as("dv")), "v")
@@ -225,7 +224,7 @@ object Graph {
     * drift), totally ordered by the unique key, so it is deterministic
     * on both engines; the all-sources form of the same question is the
     * q291 HLL reach sketch, whose state is |V|-sized at ANY seed count. */
-  private val SeedPanelK = 40
+  private[graft] val SeedPanelK = 40
 
   /** INTERNAL node encoding for the trade-graph family (round 14): node
     * ids are LONGS — customer ck ↦ 2·ck, supplier sk ↦ 2·sk+1 — not the
@@ -292,7 +291,7 @@ object Graph {
       .join(Tables.lineitem(s, dir), $"o_orderkey" === $"l_orderkey")
       .select(($"o_custkey" * 2).as("src"),
         ($"l_suppkey" * 2 + 1).as("dst"))
-    graft.operators.Pinned.checkpointAsIs(
+    Pinned.checkpointAsIs(
       raw.unionAll(raw.select($"dst".as("src"), $"src".as("dst")))
         .groupBy($"src").agg(collect_set($"dst").as("dsts")), "src")
   }
@@ -353,7 +352,7 @@ object Graph {
           col("vm0").bitwiseOR(col("em")).as("vm"),
           col("em").bitwiseAND(bitwise_not(col("vm0"))).as("lm"))
       val merged =
-        if (hop < 3) graft.operators.Pinned.checkpointAsIs(mergedLazy, "node")
+        if (hop < 3) Pinned.checkpointAsIs(mergedLazy, "node")
         else mergedLazy
       visited = merged.select(col("node"), col("vm"))
       frontier = merged.filter(col("lm") =!= 0L)
@@ -466,10 +465,10 @@ object Graph {
     val seeds = seedPanel(s, dir)
     val custDeg = edges.select($"src".as("nbr"),
       size($"dsts").cast("long").as("degw"))
-    val nbrs = seeds.join(edges, seeds("seed") === edges("src"))
+    // read by both pair sides
+    val nbrs = Pinned.pin(seeds.join(edges, seeds("seed") === edges("src"))
       .select($"seed", explode($"dsts").as("nbr"))
-      .join(custDeg, Seq("nbr")) // (seed, nbr, degw); K·deg rows
-      .localCheckpoint(eager = false) // both pair sides
+      .join(custDeg, Seq("nbr"))) // (seed, nbr, degw); K·deg rows
     val deg = seeds.join(edges, seeds("seed") === edges("src"))
       .select($"seed", size($"dsts").cast("long").as("deg"))
     val raTerm = ratio(lit(1L),
@@ -528,7 +527,7 @@ object Graph {
       .groupBy(($"o_custkey" * 2).as("src"),
         ($"l_suppkey" * 2 + 1).as("dst"))
       .agg(count(lit(1)).as("w"))
-    val edges = graft.operators.Pinned.partitionedCheckpoint(
+    val edges = Pinned.partitionedCheckpoint(
       pairs.unionAll(pairs.select($"dst".as("src"), $"src".as("dst"), $"w")),
       $"src")
     // Round-20 value-packing rework (guide §2.3 "shuffle fewer bytes" —
@@ -578,7 +577,7 @@ object Graph {
         .when($"pbns".isNull, $"bns")
         .otherwise(zip_with($"bns", $"pbns", (a, b) => greatest(a, b)))
       if (hop < 3) {
-        val merged = graft.operators.Pinned.partitionedCheckpoint(
+        val merged = Pinned.partitionedCheckpoint(
           mergedLazy.select($"node", foldBns.as("bns"),
             coalesce($"bns".isNull ||
               exists(zip_with($"bns", $"pbns", (a, b) => b > a),
@@ -716,7 +715,7 @@ object Graph {
     // census and the panel join), at 8 B/row instead of the ~0.5 KB
     // sketch — ~60× fewer pinned bytes than any sketch-carrying pin.
     // checkpointAsIs: the hop-3 groupBy(node) already placed the rows.
-    val est = graft.operators.Pinned.checkpointAsIs(
+    val est = Pinned.checkpointAsIs(
       sk.select($"node", hll_sketch_estimate($"sk").as("est")), "node")
     val nNodes = est.agg(count(lit(1)).as("n_nodes_sketched"))
     val seeds = Tables.supplier(s, dir)
@@ -783,7 +782,7 @@ object Graph {
     * 0 until LpLabelK seed the labels, so per-node votes pack into
     * LpLabelK counters. The Spark seed filter and the q294/q380 oracles
     * both read it. */
-  private val LpLabelK = 5
+  private[graft] val LpLabelK = 5
 
   private def lpLayersUnion(s: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
@@ -794,7 +793,7 @@ object Graph {
         .select(($"s_suppkey" * 2 + 1).as("node"),
           $"s_nationkey".cast("long").as("label")),
       Seq("node"))
-    var layers = List(graft.operators.Pinned.checkpointAsIs(seeds, "node"))
+    var layers = List(Pinned.checkpointAsIs(seeds, "node"))
     (1 to 3).foreach { round =>
       val frontier = layers.head
       // Round-20 vote packing (guide §2.3/§2.4 — the q290 value-array
@@ -818,7 +817,7 @@ object Graph {
         acc.join(layer, Seq("node"), "left_anti")
       }
       layers ::= (if (round < 3)
-        graft.operators.Pinned.checkpointAsIs(newlyLazy, "node")
+        Pinned.checkpointAsIs(newlyLazy, "node")
       else newlyLazy)
     }
     layers.reduce(_ unionAll _)
@@ -835,10 +834,9 @@ object Graph {
     // round 3's lazy layer is evaluated exactly once
     def kind(c: Column): Column =
       when(c % 2 === 0, lit("c")).otherwise(lit("s"))
-    val lab = labeled
+    val lab = Pinned.pin(labeled
       .groupBy(kind($"node").as("kind"), $"label")
-      .agg(count(lit(1)).as("n_nodes"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("n_nodes")))
     val labK = lab.groupBy($"kind").agg(sum($"n_nodes").as("n_lab"))
     val unl = nodes
       .groupBy(kind($"node").as("kind"))
@@ -873,12 +871,11 @@ object Graph {
     val d38 = DecimalType(38, 0)
     val adj = tradeAdjacency(s, dir)
     val asg = lpLayersUnion(s, dir, adj)
-    val comm = adj.select($"src".as("node"),
+    val comm = Pinned.pin(adj.select($"src".as("node"),
         size($"dsts").cast("long").as("deg"))
       .join(asg, Seq("node"), "left")
       .select($"node", $"deg",
-        coalesce($"label", -$"node" - 2L).as("comm"))
-      .localCheckpoint(eager = false) // read by tot + both endpoint joins
+        coalesce($"label", -$"node" - 2L).as("comm"))) // read by tot + both endpoint joins
     val m2df = adj.agg(sum(size($"dsts")).cast("long").as("m2")) // = 2m
     val in2 = adj.select($"src", explode($"dsts").as("dst"))
       .join(comm.select($"node".as("src"), $"comm".as("comm_s")), Seq("src"))
@@ -887,13 +884,12 @@ object Graph {
       .groupBy($"comm_s".as("comm")).agg(count(lit(1)).as("in2"))
     val tot = comm.groupBy($"comm")
       .agg(sum($"deg").as("tot"), count(lit(1)).as("n_nodes"))
-    val parts = tot.join(in2, Seq("comm"), "left")
+    val parts = Pinned.pin(tot.join(in2, Seq("comm"), "left")
       .crossJoin(broadcast(m2df))
       .select($"comm", $"n_nodes",
         coalesce($"in2", lit(0L)).as("in2"), $"tot",
         ($"m2".cast(d38) * coalesce($"in2", lit(0L)) -
-          $"tot".cast(d38) * $"tot").as("qpart"))
-      .localCheckpoint(eager = false) // read by the global fold + rows
+          $"tot".cast(d38) * $"tot").as("qpart"))) // read by the global fold + rows
     val glob = parts.agg(sum($"qpart").as("q_num"),
       sum(when($"comm" < 0L, 1L).otherwise(0L)).as("n_singletons"))
     parts.filter($"comm" >= 0L)
@@ -1058,24 +1054,22 @@ object Graph {
     // let the semis plan as shuffle joins.
     val adj = tradeAdjacency(s, dir)
     def degrees(surv: DataFrame): DataFrame =
-      adj.join(broadcast(surv.select($"node".as("src"))), Seq("src"), "semi")
+      Pinned.pin(adj.join(broadcast(surv.select($"node".as("src"))), Seq("src"), "semi")
         .select($"src", explode($"dsts").as("dst"))
         .join(broadcast(surv.select($"node".as("dst"))), Seq("dst"), "semi")
-        .groupBy($"src").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false)
-    val d0 = adj.select($"src", size($"dsts").cast("long").as("c"))
-      .localCheckpoint(eager = false) // map-side; read by k + S₀ + census
+        .groupBy($"src").agg(count(lit(1)).as("c")))
+    // map-side; read by k + S₀ + census
+    val d0 = Pinned.pin(adj.select($"src", size($"dsts").cast("long").as("c")))
     // k = lower median degree: cum-count selection over the degree-value
     // census (rows bounded by the degree DOMAIN — the q144 argument)
     val wCum = Window.orderBy($"c")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy($"c")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val kPin = d0.groupBy($"c").agg(count(lit(1)).as("n"))
+    val kPin = Pinned.pin(d0.groupBy($"c").agg(count(lit(1)).as("n"))
       .withColumn("cum", sum($"n").over(wCum))
       .withColumn("tot", sum($"n").over(wAll))
-      .agg(min(when($"cum" * 2 >= $"tot", $"c")).as("k"))
-      .localCheckpoint(eager = false) // 1-row, read every round
+      .agg(min(when($"cum" * 2 >= $"tot", $"c")).as("k"))) // 1-row, read every round
     // degs(r): induced degrees of round r's survivors; survivors(r) for
     // r ≥ 1 = prior degrees filtered by k. n_nodes(r) still counts the
     // SURVIVOR set (an S_r node can drop to induced degree 0 and leave
@@ -1084,10 +1078,9 @@ object Graph {
     val states = Seq.newBuilder[(Int, DataFrame, DataFrame)]
     states += ((0, d0.select($"src".as("node")), d0))
     (1 to KCoreRounds).foreach { r =>
-      val next = prevDeg
+      val next = Pinned.pin(prevDeg
         .crossJoin(broadcast(kPin)).filter($"c" >= $"k")
-        .select($"src".as("node"))
-        .localCheckpoint(eager = false) // read by 2 semi-joins + census
+        .select($"src".as("node"))) // read by 2 semi-joins + census
       val dr = degrees(next)
       states += ((r, next, dr))
       prevDeg = dr
@@ -1137,14 +1130,13 @@ object Graph {
   def hitsScores(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val raw = Tables.orders(s, dir)
+    val raw = Pinned.pin(Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), $"o_orderkey" === $"l_orderkey")
       .select($"o_custkey".as("ck"), $"l_suppkey".as("sk"))
-      .distinct()
-      .localCheckpoint(eager = false) // read by both adjacency builds
-    val ckAdj = graft.operators.Pinned.checkpointAsIs(
+      .distinct()) // read by both adjacency builds
+    val ckAdj = Pinned.checkpointAsIs(
       raw.groupBy($"ck").agg(collect_set($"sk").as("sks")), "ck")
-    val skAdj = graft.operators.Pinned.checkpointAsIs(
+    val skAdj = Pinned.checkpointAsIs(
       raw.groupBy($"sk").agg(collect_set($"ck").as("cks")), "sk")
     // (score·Scale) div max, exact; max is a 1-row broadcast scalar.
     // The raw-score input is pinned first: both the max and the main
@@ -1154,7 +1146,7 @@ object Graph {
     // and the div propagates NULL (never a zero divisor), so the
     // degenerate case yields no rows rather than an ANSI error.
     def maxNorm(df: DataFrame, key: String, v: String): DataFrame = {
-      val pinned = df.localCheckpoint(eager = false) // |V|-row score table
+      val pinned = Pinned.pin(df) // |V|-row score table
       val m = pinned.agg(max(col(v)).as("m"))
       pinned.crossJoin(broadcast(m))
         .select(col(key), expr(s"CAST(($v * $Scale) div m AS BIGINT)").as(v))
@@ -1218,10 +1210,9 @@ object Graph {
     val adj = tradeAdjacency(s, dir)
     val deg = adj.select($"src", size($"dsts").cast("long").as("w1"))
     val edges = adj.select($"src", explode($"dsts").as("dst"))
-    val w2 = edges
+    val w2 = Pinned.pin(edges
       .join(deg.select($"src".as("dst"), $"w1".as("dw")), Seq("dst"))
-      .groupBy($"src").agg(sum($"dw").as("w2"))
-      .localCheckpoint(eager = false) // read by the w3 join AND the panel
+      .groupBy($"src").agg(sum($"dw").as("w2"))) // read by the w3 join AND the panel
     val w3 = edges
       .join(w2.select($"src".as("dst"), $"w2".as("dw2")), Seq("dst"))
       .groupBy($"src").agg(sum($"dw2").as("w3"))

@@ -678,13 +678,12 @@ object LlmOps {
   def isotonicCalibration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val en = MarkerChain.toMap.apply("en")
-    val bins = Tables.documents(s, dir)
+    val bins = Pinned.pin(Tables.documents(s, dir)
       .select(
         TextOps.markerHits(TextOps.tokens($"text"), en).cast("long").as("x"),
         when($"lang" === "en", 1L).otherwise(0L).as("y"))
       .groupBy($"x")
-      .agg(count(lit(1)).as("n"), sum($"y").as("npos"))
-      .localCheckpoint(eager = false) // bounded census, read by three joins
+      .agg(count(lit(1)).as("n"), sum($"y").as("npos"))) // bounded census, read by three joins
     val pairs = broadcast(bins.select($"x".as("j")))
       .join(broadcast(bins.select($"x".as("k"))), $"j" <= $"k")
     val intervals = broadcast(pairs)
@@ -735,7 +734,7 @@ object LlmOps {
         $"w".cast("double") * lit(16777216.0) / $"hv1".cast("double"))
     // top-(k+1) — TakeOrderedAndProject, never a global sort; pinned
     // because the tiny result feeds both τ and the sample
-    val top = graft.operators.Pinned.partitionedCheckpoint(
+    val top = Pinned.partitionedCheckpoint(
       docs.orderBy($"priority".desc, $"doc_id".asc).limit(k + 1), $"doc_id")
     val tau = top.orderBy($"priority".asc, $"doc_id".desc).limit(1)
       .select($"w".as("w_t"), $"hv1".as("hv_t"), $"priority".as("tau"),
@@ -797,7 +796,7 @@ object LlmOps {
         size(array_distinct($"toks")).cast("long").as("y"))
     // bounded (x, y) cell census — pinned: consumed by the column census,
     // the survivors screen, and the dominance counter
-    val cells = graft.operators.Pinned.partitionedCheckpoint(
+    val cells = Pinned.partitionedCheckpoint(
       m.groupBy($"x", $"y").agg(count(lit(1)).as("c")), $"x")
     val colc = cells.groupBy($"x").agg(max($"y").as("ymax"))
     // M>(x) = max ymax over strictly greater x (null at the global max)
@@ -1495,14 +1494,13 @@ object LlmOps {
     * (the df-capped variant of this candidate join is q43's). */
   def minhashAccuracyGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = Tables.documents(s, dir)
+    val base = Pinned.pin(Tables.documents(s, dir)
       .withColumn("toks", TextOps.tokens($"text"))
       .filter(size($"toks") >= 3) // q41's shingle-less guard, same reason
       .withColumn("th", TextOps.tokenHashes($"toks"))
       .withColumn("hs", TextOps.shingleHashes3($"th"))
       .select($"doc_id", array_distinct($"hs").as("dsh"),
-        TextOps.minhashSignature($"hs", 12).as("sig"))
-      .localCheckpoint(eager = false) // read by bands + both pair sides
+        TextOps.minhashSignature($"hs", 12).as("sig"))) // read by bands + both pair sides
     val keyed = base
       .select($"doc_id", explode(TextOps.lshBands($"sig", 4, 3)).as("bk"))
       .select($"doc_id", $"bk.band".as("band"), $"bk.bkey".as("bkey"))
@@ -2089,15 +2087,15 @@ object LlmOps {
       .select($"qid", $"vid", $"adc")
     // exact re-rank of the bounded shortlist: fetch vectors by broadcast
     val w3 = Window.partitionBy($"qid").orderBy($"cos".desc, $"vid".asc)
-    val top3 = broadcast(shortlist)
+    // ≤30 rows, read by the output AND the recall agg
+    val top3 = Pinned.pin(broadcast(shortlist)
       .join(enriched.select($"vec_id".as("vid"), $"embedding".as("ve")), "vid")
       .join(broadcast(enriched.filter($"vec_id" < 10)
         .select($"vec_id".as("qid"), $"embedding".as("qe"))), "qid")
       .withColumn("cos", cosine(s)($"qe", $"ve"))
       .withColumn("rn", row_number().over(w3))
       .filter($"rn" <= 3)
-      .select($"qid", $"rn", $"vid", $"adc".as("adc_dist"), $"cos")
-      .localCheckpoint(eager = false) // ≤30 rows, read by the output AND the recall agg
+      .select($"qid", $"rn", $"vid", $"adc".as("adc_dist"), $"cos"))
     val exact = annBruteForce(s, dir).filter($"rn" <= 3)
       .select($"qid".as("eqid"), $"vid".as("evid"))
     val recallRow = exact
@@ -2675,14 +2673,12 @@ object LlmOps {
   def conformalThreshold(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val half = driftHalfCol
-    val base = Tables.documents(s, dir)
+    val base = Pinned.pin(Tables.documents(s, dir)
       .select($"lang", $"doc_id",
         size(TextOps.tokens($"text")).cast("long").as("ntok"))
-      .withColumn("in_a", half)
-      .localCheckpoint(eager = false) // one corpus pass feeds both half-censuses
-    val ca = base.filter($"in_a").groupBy($"lang", $"ntok")
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // bounded census, read by totals AND the rank
+      .withColumn("in_a", half)) // one corpus pass feeds both half-censuses
+    val ca = Pinned.pin(base.filter($"in_a").groupBy($"lang", $"ntok")
+      .agg(count(lit(1)).as("c"))) // bounded census, read by totals AND the rank
     val tot = ca.groupBy($"lang")
       .agg(sum($"c").as("n_cal"))
       .withColumn("k_rank",
@@ -2740,14 +2736,13 @@ object LlmOps {
     import s.implicits._
     val half = driftHalfCol
     // value census, pinned: read by the prefix window AND the totals
-    val census = Tables.documents(s, dir)
+    val census = Pinned.pin(Tables.documents(s, dir)
       .select($"lang", $"doc_id",
         size(TextOps.tokens($"text")).cast("long").as("ntok"))
       .withColumn("in_a", half)
       .groupBy($"lang", $"ntok")
       .agg(sum(when($"in_a", 1L).otherwise(0L)).as("nav"),
-        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))
-      .localCheckpoint(eager = false)
+        sum(when($"in_a", 0L).otherwise(1L)).as("nbv")))
     val totals = census.groupBy($"lang")
       .agg(sum($"nav").as("n_a"), sum($"nbv").as("n_b"))
     val w = Window.partitionBy($"lang").orderBy($"ntok")
@@ -2809,14 +2804,13 @@ object LlmOps {
     val d38 = DecimalType(38, 0)
     val half = driftHalfCol
     // value census, pinned: read by the prefix window AND the totals
-    val census = Tables.documents(s, dir)
+    val census = Pinned.pin(Tables.documents(s, dir)
       .select($"lang", $"doc_id",
         size(TextOps.tokens($"text")).cast("long").as("ntok"))
       .withColumn("in_a", half)
       .groupBy($"lang", $"ntok")
       .agg(sum(when($"in_a", 1L).otherwise(0L)).as("nav"),
-        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))
-      .localCheckpoint(eager = false)
+        sum(when($"in_a", 0L).otherwise(1L)).as("nbv")))
     val totals = census.groupBy($"lang")
       .agg(sum($"nav").as("n_a"), sum($"nbv").as("n_b"))
     val w = Window.partitionBy($"lang").orderBy($"ntok")
@@ -2970,10 +2964,9 @@ object LlmOps {
     val census = surprisalScoreCensus(s, dir)
     val w = Window.orderBy($"score".desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cums = census
+    val cums = Pinned.pin(census
       .withColumn("cum_ge", sum($"npv" + $"nnv").over(w))
-      .withColumn("cumpos_ge", sum($"npv").over(w))
-      .localCheckpoint(eager = false) // read by totals + both argmax sides
+      .withColumn("cumpos_ge", sum($"npv").over(w))) // read by totals + both argmax sides
     val tot = cums.agg(sum($"npv").as("n_pos"), sum($"nnv").as("n_neg"),
       count(lit(1)).as("n_thresholds"))
     val cand = cums.crossJoin(broadcast(tot))
@@ -3109,15 +3102,14 @@ object LlmOps {
     * census; everything after is grid-bounded. */
   def cramersV(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cells = Tables.documents(s, dir)
-      .groupBy($"lang", $"source").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // read by both margins AND the grid
+    val cells = Pinned.pin(Tables.documents(s, dir)
+      .groupBy($"lang", $"source").agg(count(lit(1)).as("n"))) // read by both margins AND the grid
     val rm = cells.groupBy($"lang").agg(sum($"n").as("r_i"))
     val cm = cells.groupBy($"source").agg(sum($"n").as("c_j"))
     val tot = cells.agg(sum($"n").as("nn"),
       countDistinct($"lang").as("n_langs"),
       countDistinct($"source").as("n_sources"))
-    val grid = rm.crossJoin(broadcast(cm))
+    val grid = Pinned.pin(rm.crossJoin(broadcast(cm))
       .join(cells, Seq("lang", "source"), "left")
       .withColumn("n_obs", coalesce($"n", lit(0L)))
       .crossJoin(broadcast(tot))
@@ -3126,8 +3118,7 @@ object LlmOps {
       // ~3·10⁹ docs; beyond, promote to decimal — the q332 envelope)
       .withColumn("e", $"r_i".cast("double") * $"c_j" / $"nn".cast("double"))
       .withColumn("resid",
-        ($"n_obs".cast("double") - $"e") / sqrt($"e"))
-      .localCheckpoint(eager = false) // read by the fold AND the rows
+        ($"n_obs".cast("double") - $"e") / sqrt($"e"))) // read by the fold AND the rows
     val chi = grid
       .agg(sort_array(collect_list(struct($"lang", $"source",
         $"n_obs", $"r_i", $"c_j", $"nn"))).as("xs"))
@@ -3191,15 +3182,14 @@ object LlmOps {
       .agg(count(lit(1)).as("n_new_types"))
     val w = Window.orderBy($"band")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val curve = perBandDocs
+    val curve = Pinned.pin(perBandDocs
       .join(perBandToks, Seq("band"), "left")
       .join(perBandNew, Seq("band"), "left")
       .select($"band", $"n_docs",
         coalesce($"n_tokens", lit(0L)).as("n_tokens"),
         coalesce($"n_new_types", lit(0L)).as("n_new_types"))
       .withColumn("cum_tokens", sum($"n_tokens").over(w))
-      .withColumn("cum_types", sum($"n_new_types").over(w))
-      .localCheckpoint(eager = false) // read by the rows AND the ratios
+      .withColumn("cum_types", sum($"n_new_types").over(w))) // read by the rows AND the ratios
     val half = VgBands / 2 - 1
     val tot = curve.agg(
       sum(when($"band" <= half, $"n_tokens").otherwise(0L)).as("n_half"),
@@ -3239,13 +3229,13 @@ object LlmOps {
   def permutationTest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val obsHalf = driftHalfCol
-    val base = Tables.documents(s, dir)
+    // read by the observed agg + perms
+    val base = Pinned.pin(Tables.documents(s, dir)
       .select($"doc_id",
         size(TextOps.tokens($"text")).cast("long").as("ntok"))
       .withColumn("in_a", obsHalf)
       .withColumn("h", conv(substring(md5(concat(lit("perm:"),
-        $"doc_id".cast("string"))), 1, 15), 16, 10).cast("long"))
-      .localCheckpoint(eager = false) // read by the observed agg + perms
+        $"doc_id".cast("string"))), 1, 15), 16, 10).cast("long")))
     val obs = base.agg(
       sum(when($"in_a", 1L).otherwise(0L)).as("n_a"),
       sum(when($"in_a", $"ntok").otherwise(0L)).as("s_a"),
@@ -3331,10 +3321,9 @@ object LlmOps {
         sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))
     val w = Window.orderBy($"ntok")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cums = census
+    val cums = Pinned.pin(census
       .withColumn("cum_a", sum($"nav").over(w))
-      .withColumn("cum_b", sum($"nbv").over(w))
-      .localCheckpoint(eager = false) // read by totals + the selections
+      .withColumn("cum_b", sum($"nbv").over(w))) // read by totals + the selections
     val tot = cums.agg(coalesce(max($"cum_a"), lit(0L)).as("n_a"),
       coalesce(max($"cum_b"), lit(0L)).as("n_b"))
     cums.crossJoin(broadcast(tot))
@@ -3374,17 +3363,16 @@ object LlmOps {
   def kruskalWallis(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val cells = Tables.documents(s, dir)
+    val cells = Pinned.pin(Tables.documents(s, dir)
       .select($"lang", size(TextOps.tokens($"text")).cast("long").as("ntok"))
-      .groupBy($"lang", $"ntok").agg(count(lit(1)).as("nv"))
-      .localCheckpoint(eager = false) // read by the value census + groups
+      .groupBy($"lang", $"ntok").agg(count(lit(1)).as("nv"))) // read by the value census + groups
     val vals = cells.groupBy($"ntok").agg(sum($"nv").as("w"))
     val wWin = Window.orderBy($"ntok")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dr = vals
+    // read by the rank join + ties
+    val dr = Pinned.pin(vals
       .withColumn("cum_before", sum($"w").over(wWin) - $"w")
-      .select($"ntok", (lit(2L) * $"cum_before" + $"w" + 1L).as("dr"), $"w")
-      .localCheckpoint(eager = false) // read by the rank join + ties
+      .select($"ntok", (lit(2L) * $"cum_before" + $"w" + 1L).as("dr"), $"w"))
     val grp = cells.join(dr.select($"ntok", $"dr"), "ntok")
       .groupBy($"lang")
       .agg(sum($"nv").as("n_j"), sum($"nv".cast(d38) * $"dr").as("s2_j"))
@@ -3563,9 +3551,9 @@ object LlmOps {
   def effectiveSampleSize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val base = Tables.documents(s, dir)
-      .select($"source", size(TextOps.tokens($"text")).cast("long").as("w"))
-      .localCheckpoint(eager = false) // read per-source + pooled
+    // read per-source + pooled
+    val base = Pinned.pin(Tables.documents(s, dir)
+      .select($"source", size(TextOps.tokens($"text")).cast("long").as("w")))
     val moments = Seq(count(lit(1)).as("n"), sum($"w".cast(d38)).as("sw"),
       sum($"w".cast(d38) * $"w").as("sw2"))
     // ONE projection tree over the (n, sw, sw2) moments for BOTH the
@@ -3607,13 +3595,12 @@ object LlmOps {
   def brownForsytheDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val census = Tables.documents(s, dir)
+    val census = Pinned.pin(Tables.documents(s, dir)
       .select($"doc_id", size(TextOps.tokens($"text")).cast("long").as("ntok"))
       .withColumn("in_a", driftHalfCol)
       .groupBy($"ntok")
       .agg(sum(when($"in_a", 1L).otherwise(0L)).as("nav"),
-        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))
-      .localCheckpoint(eager = false) // read by cums AND the dev moments
+        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))) // read by cums AND the dev moments
     val w = Window.orderBy($"ntok")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cums = census
@@ -3723,13 +3710,12 @@ object LlmOps {
   def cliffsDeltaDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val census = Tables.documents(s, dir)
+    val census = Pinned.pin(Tables.documents(s, dir)
       .select($"doc_id", size(TextOps.tokens($"text")).cast("long").as("ntok"))
       .withColumn("in_a", driftHalfCol)
       .groupBy($"ntok")
       .agg(sum(when($"in_a", 1L).otherwise(0L)).as("nav"),
-        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))
-      .localCheckpoint(eager = false) // both pair sides + the totals
+        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))) // both pair sides + the totals
     val tot = census.agg(sum($"nav").as("n_a"), sum($"nbv").as("n_b"))
     val pairs = census
       .crossJoin(broadcast(census.select($"ntok".as("vb"), $"nbv".as("nbvb"))))
@@ -3796,13 +3782,12 @@ object LlmOps {
     * reads it at least twice (pair sides, totals, windows). */
   private def driftNtokCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
+    Pinned.pin(Tables.documents(s, dir)
       .select($"doc_id", size(TextOps.tokens($"text")).cast("long").as("ntok"))
       .withColumn("in_a", driftHalfCol)
       .groupBy($"ntok")
       .agg(sum(when($"in_a", 1L).otherwise(0L)).as("nav"),
-        sum(when($"in_a", 0L).otherwise(1L)).as("nbv"))
-      .localCheckpoint(eager = false)
+        sum(when($"in_a", 0L).otherwise(1L)).as("nbv")))
   }
 
   /** 1-Wasserstein (earth-mover) distance between the drift halves
@@ -3915,13 +3900,12 @@ object LlmOps {
   def hodgesLehmannShift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val census = driftNtokCensus(s, dir)
-    val diffs = census
+    val diffs = Pinned.pin(census
       .crossJoin(broadcast(census.select($"ntok".as("vb"),
         $"nbv".as("nbvb"))))
       .filter($"nav" > 0L && $"nbvb" > 0L)
       .groupBy(($"ntok" - $"vb").as("diff"))
-      .agg(sum($"nav" * $"nbvb").as("w"))
-      .localCheckpoint(eager = false) // read by the pair count AND the scan
+      .agg(sum($"nav" * $"nbvb").as("w"))) // read by the pair count AND the scan
     val tot = census.agg(sum($"nav").as("n_a"), sum($"nbv").as("n_b"))
     val np = diffs.agg(coalesce(sum($"w"), lit(0L)).as("n_pairs"))
     val w = Window.orderBy($"diff")
@@ -4203,7 +4187,7 @@ object LlmOps {
     * (q396/q397/q402/q417/q424) — ONE pass computes everything the three
     * vote chains consume per doc: the token array (lm + rules), the
     * space-stripped length (rules), and the bigram digests (learned
-    * filter), pinned with a lazy localCheckpoint so the chains share it.
+    * filter), pinned with a lazy [[Pinned.pin]] so the chains share it.
     * Optimization-round rework (guide §1.2 step 1 / §2.3): each chain
     * previously re-read the parquet and re-tokenized independently — a
     * 3-chain query paid ~6 tokenize passes and 2 md5 token-hash passes
@@ -4215,14 +4199,12 @@ object LlmOps {
     * lesson). Results are unchanged: every chain applies the same
     * expressions it previously applied directly to the scan.
     *
-    * This is the repo's one CORPUS-SIZED pin (toks + digests per doc) —
-    * the local-checkpoint executor-loss caveat and the
-    * `SPARK_GRAFT_PIN_MODE=reliable` upgrade path are documented at
-    * [[graft.operators.Pinned]]; routing through [[Pinned.pin]] keeps
-    * this site on that escape hatch. */
+    * This is the repo's one CORPUS-SIZED pin (toks + digests per doc).
+    * Like every pin it is local unless Spark has a checkpoint directory,
+    * and then reliable; [[Pinned.pin]] documents both modes. */
   private def ensembleDocBase(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.Pinned.pin(
+    Pinned.pin(
       Tables.documents(s, dir)
         .withColumn("toks", TextOps.tokens($"text"))
         .withColumn("th", TextOps.tokenHashes($"toks"))
@@ -4457,10 +4439,9 @@ object LlmOps {
     val vSize = docs.filter($"is_train")
       .select(explode($"toks").as("tok"))
       .agg(countDistinct($"tok").as("v"))
-    val bi = docs.filter($"is_train")
+    val bi = Pinned.pin(docs.filter($"is_train")
       .select(explode(TextOps.wordShingles($"toks", 2)).as("bg"))
-      .groupBy($"bg").agg(count(lit(1)).as("c2"))
-      .localCheckpoint(eager = false) // read by prefix/cont/T AND scoring
+      .groupBy($"bg").agg(count(lit(1)).as("c2"))) // read by prefix/cont/T AND scoring
     val prefix = bi
       .withColumn("w1", element_at(split($"bg", " "), 1))
       .groupBy($"w1").agg(sum($"c2").as("cp"), count(lit(1)).as("n1p"))
@@ -4675,12 +4656,12 @@ object LlmOps {
   def kendallWProxies(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val base = Tables.documents(s, dir)
+    // read by 3 rank chains + the join
+    val base = Pinned.pin(Tables.documents(s, dir)
       .select($"doc_id",
         size(TextOps.tokens($"text")).cast("long").as("sa"),
         length($"text").cast("long").as("sb"),
-        size(array_distinct(TextOps.tokens($"text"))).cast("long").as("sc"))
-      .localCheckpoint(eager = false) // read by 3 rank chains + the join
+        size(array_distinct(TextOps.tokens($"text"))).cast("long").as("sc")))
     def ranked(scoreCol: String, out: String): DataFrame = {
       val census = base.groupBy(col(scoreCol).as("v"))
         .agg(count(lit(1)).as("w"))
@@ -4941,10 +4922,10 @@ object LlmOps {
   def blandAltmanCharsBudget(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val diffs = Tables.documents(s, dir)
+    // read by the moment agg + the scan
+    val diffs = Pinned.pin(Tables.documents(s, dir)
       .select(($"n_chars".cast("long") -
-        size(TextOps.tokens($"text")).cast("long") * CharsPerTok).as("d"))
-      .localCheckpoint(eager = false) // read by the moment agg + the scan
+        size(TextOps.tokens($"text")).cast("long") * CharsPerTok).as("d")))
     val g = diffs.agg(count(lit(1)).as("n"),
       sum($"d").as("sd1"), sum($"d".cast(d38) * $"d").as("sd2"))
     val varNum = $"n".cast(d38) * $"sd2" -
@@ -4980,8 +4961,7 @@ object LlmOps {
     * Scale: the shared fof census → a ≤5-row explode per lang. */
   def goodTuringMass(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val fof = langFreqOfFreq(s, dir)
-      .localCheckpoint(eager = false) // read by totals AND the ladder
+    val fof = Pinned.pin(langFreqOfFreq(s, dir)) // read by totals AND the ladder
     val tot = fof.groupBy($"lang").agg(
       sum($"r" * $"fr").as("n_tokens"),
       sum($"fr").as("n_types"),
@@ -5248,9 +5228,8 @@ object LlmOps {
       .select((coalesce($"ka", lit(false)).cast("long") +
         coalesce($"kr", lit(false)).cast("long") +
         coalesce($"kl", lit(false)).cast("long")).as("k_keep"))
-    val census = votes.groupBy($"k_keep")
-      .agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(eager = false) // read by the moments AND the rows
+    val census = Pinned.pin(votes.groupBy($"k_keep")
+      .agg(count(lit(1)).as("n_docs"))) // read by the moments AND the rows
     val tot = census.agg(sum($"n_docs").as("nn"),
       sum($"k_keep" * $"n_docs").as("kk"),
       sum($"k_keep" * $"k_keep" * $"n_docs").as("qq"))
@@ -5474,16 +5453,15 @@ object LlmOps {
     * single-spaced form got wrong). */
   private def bpeVocab(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // localCheckpoint: the dict is referenced by both merge rounds — cut
+    // Pinned: the dict is referenced by both merge rounds — cut
     // lineage so the corpus word-count really runs ONCE (q76's pattern).
     // LAZY (r20, the r19 min-label lesson): the first consumer's action
     // materializes the pin, so the dict build is not its own extra job.
-    Tables.documents(s, dir)
+    Pinned.pin(Tables.documents(s, dir)
       .select(explode(TextOps.tokens($"text")).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
       .withColumn("seg", concat(lit("  "),
-        regexp_replace($"w", "(.)", "$1  ")))
-      .localCheckpoint(eager = false)
+        regexp_replace($"w", "(.)", "$1  "))))
   }
   private def bpePairCounts(v: DataFrame): DataFrame = {
     import v.sparkSession.implicits._
@@ -5983,21 +5961,20 @@ object LlmOps {
     * hash-checked). */
   def unigramLmTokenizer(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val words = Tables.documents(s, dir)
+    // the ONE corpus pass; reused by grid + every round (lazy, r20: the
+    // round-1 median gate materializes the whole chain in one action)
+    val words = Pinned.pin(Tables.documents(s, dir)
       .select(explode(TextOps.tokens($"text")).as("w"))
       .filter(length($"w") >= 1)
-      .groupBy($"w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(eager = false) // the ONE corpus pass; reused by
-        // grid + every round (lazy, r20: the round-1 median gate
-        // materializes the whole chain in one action)
+      .groupBy($"w").agg(count(lit(1)).as("freq")))
     // (start, len) grid per word; invalid cells (running past the word
     // end) carry a NULL piece so no lookup can alias a shorter piece
-    val grid = words.select($"w", explode(sequence(lit(1), length($"w"))).as("st"))
+    // reused by the seed census and both rounds
+    val grid = Pinned.pin(words.select($"w", explode(sequence(lit(1), length($"w"))).as("st"))
       .select($"w", $"st",
         explode(sequence(lit(1), lit(UlmMaxPieceLen))).as("j"))
       .withColumn("piece",
-        when($"st" + $"j" - 1 <= length($"w"), $"w".substr($"st", $"j")))
-      .localCheckpoint(eager = false) // reused by the seed census and both rounds
+        when($"st" + $"j" - 1 <= length($"w"), $"w".substr($"st", $"j"))))
     // E-step: cost grid via one broadcast join, then within-row folds
     def eStep(pieces: DataFrame): DataFrame = {
       val cm = grid
@@ -6046,25 +6023,23 @@ object LlmOps {
         .groupBy($"piece").agg(sum($"freq").as("u"))
     }
     // SEED: weighted substring census → chars ∪ top-K multi, bit costs
-    val subCounts = grid.filter($"piece".isNotNull)
+    val subCounts = Pinned.pin(grid.filter($"piece".isNotNull)
       .join(words.select($"w", $"freq"), "w")
-      .groupBy($"piece").agg(sum($"freq").as("c"))
-      .localCheckpoint(eager = false) // read by chars + the top-K cut
+      .groupBy($"piece").agg(sum($"freq").as("c"))) // read by chars + the top-K cut
     val seed = subCounts.filter(length($"piece") === 1)
       .unionAll(subCounts.filter(length($"piece") > 1)
         .orderBy($"c".desc, $"piece".asc).limit(UlmSeedMulti))
     val ctDf = seed.agg(sum($"c").as("ct"))
-    var pieces = seed.crossJoin(broadcast(ctDf))
-      .select($"piece", (bits($"ct") - bits($"c")).as("cost"), lit(0L).as("u"))
-      .localCheckpoint(eager = false)
+    var pieces = Pinned.pin(seed.crossJoin(broadcast(ctDf))
+      .select($"piece", (bits($"ct") - bits($"c")).as("cost"), lit(0L).as("u")))
     val meds = Seq.newBuilder[Long]
     for (_ <- 1 to UlmRounds) {
       val usage = eStep(pieces)
-      val pu = pieces.select($"piece")
+      // read by the gate, the prune, and the recost — the med gate below
+      // materializes it
+      val pu = Pinned.pin(pieces.select($"piece")
         .join(usage, Seq("piece"), "left")
-        .withColumn("u", coalesce($"u", lit(0L)))
-        .localCheckpoint(eager = false) // read by the gate, the prune,
-          // and the recost — the med gate below materializes it
+        .withColumn("u", coalesce($"u", lit(0L))))
       // prune line = lower-median of the NONZERO multi-char usages: a
       // zero-usage median would disarm the prune entirely (most seeds
       // are never chosen by Viterbi — measured 24/48 at sf0.01), while
@@ -6080,11 +6055,10 @@ object LlmOps {
       val sur = pu.filter(length($"piece") === 1 ||
         ($"u" > 0L && $"u" >= med))
       val ut = sur.agg(sum($"u").as("ut"))
-      pieces = sur.crossJoin(broadcast(ut))
+      pieces = Pinned.pin(sur.crossJoin(broadcast(ut))
         .select($"piece",
           (bits($"ut") - when($"u" > 0, bits($"u")).otherwise(lit(0L)))
-            .as("cost"), $"u")
-        .localCheckpoint(eager = false)
+            .as("cost"), $"u"))
     }
     val medv = meds.result()
     val np = pieces.agg(count(lit(1)).as("n_pieces"),
@@ -6216,9 +6190,8 @@ object LlmOps {
   def simpsonDiversity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val cells = Tables.documents(s, dir)
-      .groupBy($"source", $"lang").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false) // read per-source + pooled
+    val cells = Pinned.pin(Tables.documents(s, dir)
+      .groupBy($"source", $"lang").agg(count(lit(1)).as("n"))) // read per-source + pooled
     val per = cells.groupBy($"source")
       .agg(sum($"n").as("n_docs"), count(lit(1)).as("n_langs"),
         sum($"n".cast(d38) * $"n").as("c"))
@@ -6260,8 +6233,7 @@ object LlmOps {
     // ONE TakeOrdered pass derives the K-row panel; it feeds both the
     // broadcast struct and the occurrence spine below (r18 verdict:
     // the twin orderBy/limit cost a second full scan at 100 TB)
-    val panelRows = e.orderBy($"vec_id".asc).limit(LabelPanelK)
-      .localCheckpoint(eager = false)
+    val panelRows = Pinned.pin(e.orderBy($"vec_id".asc).limit(LabelPanelK))
     val panel = panelRows
       .select(struct($"vec_id".as("vid"), $"embedding".as("ve")).as("p"))
       .agg(sort_array(collect_list($"p")).as("panel"))
@@ -6280,11 +6252,10 @@ object LlmOps {
           p.getField("vid").as("vid"))),
         byCosDescVidAsc), 1, 5)).as("t"))
       .groupBy($"t.vid".as("vid")).agg(count(lit(1)).as("occ"))
-    val full = panelRows
+    val full = Pinned.pin(panelRows
       .select($"vec_id".as("vid"))
       .join(occs, Seq("vid"), "left")
-      .select($"vid", coalesce($"occ", lit(0L)).as("n_occ"))
-      .localCheckpoint(eager = false) // read by moments + output rows
+      .select($"vid", coalesce($"occ", lit(0L)).as("n_occ"))) // read by moments + output rows
     val mom = full.agg(count(lit(1)).as("n_panel"), sum($"n_occ").as("s"))
     val g = full.crossJoin(broadcast(mom))
       .select($"n_panel", $"s", ($"n_panel" * $"n_occ" - $"s").as("c"),
@@ -6398,7 +6369,7 @@ object LlmOps {
     * `row_number() OVER (ORDER BY ...)` collapses the dataset onto one
     * reducer at 100 TB, so the declared implementation is the scalable
     * two-pass form — range-repartition on the total order, PIN the
-    * partitioned result with localCheckpoint (RangePartitioner samples
+    * partitioned result with Pinned.pin (RangePartitioner samples
     * boundaries per job, so without pinning the offsets job and the
     * ranks job could see DIFFERENT cuts and emit non-dense ids), rank
     * WITHIN each partition (parallel windows), and add per-partition
@@ -6412,15 +6383,14 @@ object LlmOps {
     val vocab = Tables.documents(s, dir)
       .select(explode(TextOps.tokens($"text")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("freq"))
-    val parts = vocab
+    // Lazy pin: still a SINGLE materialization of the sampled range cuts
+    // at first action (offsets + ranks then read the same cuts), but
+    // plan-only consumers (ExplainAudit, tests that never run the query)
+    // no longer pay an eager full-pipeline execution.
+    val parts = Pinned.pin(vocab
       .repartitionByRange(8, $"freq".desc, $"tok".asc)
       .sortWithinPartitions($"freq".desc, $"tok".asc)
-      .withColumn("pid", spark_partition_id())
-      // Lazy checkpoint: still pins a SINGLE materialization of the sampled
-      // range cuts at first action (offsets + ranks then read the same
-      // cuts), but plan-only consumers (ExplainAudit, tests that never
-      // run the query) no longer pay an eager full-pipeline execution.
-      .localCheckpoint(eager = false)
+      .withColumn("pid", spark_partition_id()))
     // offset(pid) = rows in all preceding partitions (empty-input safe):
     // running sum over the pid-count table (#partitions rows, so the
     // single-partition window is trivially cheap at any corpus scale).
@@ -6477,13 +6447,13 @@ object LlmOps {
     // The null rows it emits for <3-token docs never join (every
     // downstream edge is an equi-join on sh or on a doc that has rows in
     // `pre`), so no explicit filter is needed.
-    val dt = Tables.documents(s, dir)
+    // read by pre + verify ×2: pinning costs nothing here and saves two
+    // full corpus re-digests at scale (Bench/Verify release the blocks
+    // after each query's action)
+    val dt = Pinned.pin(Tables.documents(s, dir)
       .withColumn("th", TextOps.tokenHashes(TextOps.tokens($"text")))
       .select($"doc_id",
-        explode_outer(array_distinct(TextOps.shingleHashes3($"th"))).as("sh"))
-      .localCheckpoint(eager = false) // read by pre + verify ×2: pinning
-      // costs nothing here and saves two full corpus re-digests at scale
-      // (Bench/Verify release the blocks after each query's action)
+        explode_outer(array_distinct(TextOps.shingleHashes3($"th"))).as("sh")))
     // df via a window over ONE explicit sh-repartition instead of a
     // groupBy+join: the q43 lesson — both candidate self-join sides then
     // hang off the same exchange (ReuseExchange), and the digest scan
@@ -6796,15 +6766,14 @@ object LlmOps {
         collect_list(struct(col("bucket"), col("w"))))).as("m"))
       .select(transform(sequence(lit(0), lit(QfBuckets.toInt - 1)),
         i => coalesce(element_at(col("m"), i.cast("int")), lit(0L))).as("wa"))
-    val scored = base
+    val scored = Pinned.pin(base
       .crossJoin(broadcast(wvec))
       .select(col("doc_id"), col("lang"),
         size(col("bgs")).cast("long").as("n_bigrams"),
         aggregate(col("bgs"), lit(0L),
           (acc, h) => acc +
             element_at(col("wa"), (h % QfBuckets).cast("int") + 1))
-          .as("score_bits"))
-      .localCheckpoint(eager = false) // read by the calib totals + census
+          .as("score_bits"))) // read by the calib totals + census
     val calib = scored.agg(sum(col("score_bits")).as("ts"),
       sum(col("n_bigrams")).as("tnb"))
     scored.crossJoin(broadcast(calib))
@@ -6839,14 +6808,13 @@ object LlmOps {
     * prunes map-side), 20-row output. */
   def bitextMarginMining(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val emb = Tables.embeddings(s, dir)
+    val emb = Pinned.pin(Tables.embeddings(s, dir)
       .join(Tables.documents(s, dir).select($"doc_id", $"lang"),
         $"vec_id" === $"doc_id")
       .select($"vec_id", $"lang", $"embedding",
         explode_outer(VectorOps.signBandKeys($"embedding", 8, 4)).as("bk"))
       .select($"vec_id", $"lang", $"embedding",
-        $"bk.band".as("band"), $"bk.key".as("key"))
-      .localCheckpoint(eager = false) // read by both candidate sides
+        $"bk.band".as("band"), $"bk.key".as("key"))) // read by both candidate sides
     val src = emb.filter($"lang" === "en")
       .select($"vec_id".as("en_id"), $"band", $"key", $"embedding".as("se"))
     val tgt = emb.filter($"lang" === "de")
@@ -6899,12 +6867,12 @@ object LlmOps {
     import s.implicits._
     def dig(c: Column): Column =
       conv(substring(md5(c.cast("string")), 1, 10), 16, 10).cast("long")
-    val full = Tables.documents(s, dir).select($"doc_id")
+    // read by both scheme censuses
+    val full = Pinned.pin(Tables.documents(s, dir).select($"doc_id")
       .join(dedupLabels(s, dir), $"doc_id" === $"node", "left")
       .select($"doc_id", coalesce($"lab", $"doc_id").as("lab"))
       .withColumn("naive_test", dig(concat(lit("split:"), $"doc_id")) % 10 === 0)
-      .withColumn("aware_test", dig(concat(lit("split:"), $"lab")) % 10 === 0)
-      .localCheckpoint(eager = false) // read by both scheme censuses
+      .withColumn("aware_test", dig(concat(lit("split:"), $"lab")) % 10 === 0))
     def scheme(name: String, testCol: Column): DataFrame = {
       val perLab = full.groupBy($"lab").agg(
         count(lit(1)).as("n"),
@@ -6983,8 +6951,7 @@ object LlmOps {
 
   def jlProjectionCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val proj = jlProjected(s, dir, JlDims)
-      .localCheckpoint(eager = false) // read by corpus stats + both pair sides
+    val proj = Pinned.pin(jlProjected(s, dir, JlDims)) // read by corpus stats + both pair sides
     val stats = proj.agg(count(lit(1)).as("n_vectors"),
       sum(floor(element_at($"p", 1) * lit(1048576.0)).cast("long"))
         .as("proj_checksum"))
@@ -7031,10 +6998,9 @@ object LlmOps {
     * any SF. */
   def quantileNormalization(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val srcCen = Tables.documents(s, dir)
+    val srcCen = Pinned.pin(Tables.documents(s, dir)
       .select($"source", size(TextOps.tokens($"text")).cast("long").as("ntok"))
-      .groupBy($"source", $"ntok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // read by source CDF AND pooled CDF
+      .groupBy($"source", $"ntok").agg(count(lit(1)).as("c"))) // read by source CDF AND pooled CDF
     val wSrc = Window.partitionBy($"source").orderBy($"ntok")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wSrcAll = Window.partitionBy($"source")
@@ -7174,8 +7140,8 @@ object LlmOps {
         p => p.getField("y").isNotNull &&
           p.getField("x") =!= p.getField("y"))).as("p"))
       .select(least($"p.x", $"p.y").as("u"), greatest($"p.x", $"p.y").as("v"))
-    val mult = prs.groupBy($"u", $"v").agg(count(lit(1)).as("m"))
-      .localCheckpoint(eager = false) // read by the threshold + edge filter
+    // read by the threshold + edge filter
+    val mult = Pinned.pin(prs.groupBy($"u", $"v").agg(count(lit(1)).as("m")))
     // Sparsifier: keep edges at or above the LOWER-MEDIAN pair
     // multiplicity (the q337 self-normalizing selection). The q202 lift
     // rule is wrong here: a natural-language co-occurrence graph is
@@ -7194,7 +7160,7 @@ object LlmOps {
       .agg(min(when($"cum" * 2 >= $"tot", $"mv")).as("thr"))
     val und = mult.crossJoin(broadcast(thr)).filter($"m" >= $"thr")
       .select($"u", $"v", $"m")
-    val adj = graft.operators.Pinned.checkpointAsIs(
+    val adj = Pinned.checkpointAsIs(
       und.unionAll(und.select($"v".as("u"), $"u".as("v"), $"m"))
         .groupBy($"u").agg(collect_list(struct($"v", $"m")).as("es"),
           sum($"m").as("sw")),
@@ -7302,12 +7268,11 @@ object LlmOps {
     * one ≤k-row fold per point. */
   def lofGridOutliers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = jlProjected(s, dir, 2)
+    val pts = Pinned.pin(jlProjected(s, dir, 2)
       .select($"vec_id", element_at($"p", 1).as("y0"),
         element_at($"p", 2).as("y1"))
       .withColumn("cx", floor($"y0" / lit(DbscanEps)).cast("long"))
-      .withColumn("cy", floor($"y1" / lit(DbscanEps)).cast("long"))
-      .localCheckpoint(eager = false) // probe + build + output spine
+      .withColumn("cy", floor($"y1" / lit(DbscanEps)).cast("long"))) // probe + build + output spine
     val probe = pts
       .select($"vec_id".as("ia"), $"y0".as("xa"), $"y1".as("ya"),
         $"cx", $"cy")
@@ -7317,19 +7282,17 @@ object LlmOps {
         ($"cx" + $"dx").as("gx"), ($"cy" + $"dy").as("gy"))
     val build = pts.select($"vec_id".as("ib"), $"y0".as("xb"),
       $"y1".as("yb"), $"cx".as("gx"), $"cy".as("gy"))
-    val ranked = probe.join(build, Seq("gx", "gy"))
+    val ranked = Pinned.pin(probe.join(build, Seq("gx", "gy"))
       .filter($"ia" =!= $"ib")
       .select($"ia", $"ib",
         (($"xa" - $"xb") * ($"xa" - $"xb") +
           ($"ya" - $"yb") * ($"ya" - $"yb")).as("d2"))
       .withColumn("rk", row_number().over(
         Window.partitionBy($"ia").orderBy($"d2".asc, $"ib".asc)))
-      .filter($"rk" <= LofK)
-      .localCheckpoint(eager = false) // read by kdist AND the nbr join
-    val kd = ranked.groupBy($"ia")
+      .filter($"rk" <= LofK)) // read by kdist AND the nbr join
+    val kd = Pinned.pin(ranked.groupBy($"ia")
       .agg(count(lit(1)).as("n_nbr"),
-        max(when($"rk" === LofK, $"d2")).as("kdist2"))
-      .localCheckpoint(eager = false) // read by the score AND as nbr side
+        max(when($"rk" === LofK, $"d2")).as("kdist2"))) // read by the score AND as nbr side
     val nbrMean = ranked
       .join(kd.select($"ia".as("ib"), $"kdist2".as("nkd")), Seq("ib"), "left")
       .groupBy($"ia")
@@ -7362,8 +7325,7 @@ object LlmOps {
   private def dbscanCensus(ptsIn: DataFrame): DataFrame = {
     val s = ptsIn.sparkSession
     import s.implicits._
-    val pts = ptsIn
-      .localCheckpoint(eager = false) // read by probe/build sides + total
+    val pts = Pinned.pin(ptsIn) // read by probe/build sides + total
     val probe = pts
       .select($"vec_id".as("ia"), $"y0".as("xa"), $"y1".as("ya"),
         $"cx", $"cy", $"eps2")
@@ -7373,15 +7335,14 @@ object LlmOps {
         ($"cx" + $"dx").as("gx"), ($"cy" + $"dy").as("gy"))
     val build = pts.select($"vec_id".as("ib"), $"y0".as("xb"),
       $"y1".as("yb"), $"cx".as("gx"), $"cy".as("gy"))
-    val nbr = probe.join(build, Seq("gx", "gy"))
+    // read by degrees + edges + borders
+    val nbr = Pinned.pin(probe.join(build, Seq("gx", "gy"))
       .filter(($"xa" - $"xb") * ($"xa" - $"xb") +
         ($"ya" - $"yb") * ($"ya" - $"yb") <= $"eps2")
-      .select($"ia", $"ib") // symmetric; includes the self-pair
-      .localCheckpoint(eager = false) // read by degrees + edges + borders
-    val deg = nbr.groupBy($"ia").agg(count(lit(1)).as("nn"))
-      .localCheckpoint(eager = false) // read by cores + non-cores
-    val cores = deg.filter($"nn" >= DbscanMinPts).select($"ia".as("v"))
-      .localCheckpoint(eager = false)
+      .select($"ia", $"ib")) // symmetric; includes the self-pair
+    // read by cores + non-cores
+    val deg = Pinned.pin(nbr.groupBy($"ia").agg(count(lit(1)).as("nn")))
+    val cores = Pinned.pin(deg.filter($"nn" >= DbscanMinPts).select($"ia".as("v")))
     // core-core edges as (src, dst); nbr carries each core's self-pair
     val coreEdges = Pinned.pin(nbr
       .join(broadcast(cores.select($"v".as("ia"))), Seq("ia"), "semi")
@@ -7443,10 +7404,9 @@ object LlmOps {
     * docs/PLANS.md). */
   def dbscanAutoEps(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val proj = jlProjected(s, dir, 2)
+    val proj = Pinned.pin(jlProjected(s, dir, 2)
       .select($"vec_id", element_at($"p", 1).as("y0"),
-        element_at($"p", 2).as("y1"))
-      .localCheckpoint(eager = false) // read by the density census + pts
+        element_at($"p", 2).as("y1"))) // read by the density census + pts
     val pcen = proj
       .select(floor($"y0" / lit(DbscanEps)).as("px"),
         floor($"y1" / lit(DbscanEps)).as("py"))
@@ -7496,9 +7456,8 @@ object LlmOps {
           floor(element_at($"p", 1) / lit(DbscanEps)).cast("long"),
           floor(element_at($"p", 2) / lit(DbscanEps)).cast("long")).as("cell"))
       .join(Tables.embeddings(s, dir).select($"vec_id", $"label"), "vec_id")
-    val cont = cells.groupBy($"label", $"cell")
-      .agg(count(lit(1)).as("nij"))
-      .localCheckpoint(eager = false) // read by Sij, both margins, and the totals
+    val cont = Pinned.pin(cells.groupBy($"label", $"cell")
+      .agg(count(lit(1)).as("nij"))) // read by Sij, both margins, and the totals
     val sij = cont.agg(sum($"nij" * ($"nij" - 1L)).as("s2ij"),
       sum($"nij").as("n"), countDistinct($"label").as("n_labels"),
       countDistinct($"cell").as("n_cells"))
@@ -7550,23 +7509,21 @@ object LlmOps {
       .select($"vec_id".as("qid"), $"embedding".as("qe"))
     val c = e.select($"vec_id".as("vid"), $"embedding".as("ve"))
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"vid".asc)
-    val cand = broadcast(q).join(c, $"qid" =!= $"vid")
+    val cand = Pinned.pin(broadcast(q).join(c, $"qid" =!= $"vid")
       .withColumn("cos", graft.operators.VectorOps.cosine(s)($"qe", $"ve"))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= MmrCandidates)
-      .select($"qid", $"vid", $"ve", $"cos".as("rel"))
-      .localCheckpoint(eager = false) // read by sims + all 5 steps
-    val sims = cand.select($"qid", $"vid".as("vi"), $"ve".as("ei"))
+      .select($"qid", $"vid", $"ve", $"cos".as("rel"))) // read by sims + all 5 steps
+    val sims = Pinned.pin(cand.select($"qid", $"vid".as("vi"), $"ve".as("ei"))
       .join(cand.select($"qid".as("q2"), $"vid".as("vj"), $"ve".as("ej")),
         $"qid" === $"q2" && $"vi" =!= $"vj")
       .select($"qid", $"vi", $"vj",
-        graft.operators.VectorOps.cosine(s)($"ei", $"ej").as("sim"))
-      .localCheckpoint(eager = false) // read by steps 2..5
+        graft.operators.VectorOps.cosine(s)($"ei", $"ej").as("sim"))) // read by steps 2..5
     val wPick = Window.partitionBy($"qid").orderBy($"score".desc, $"vid".asc)
     val first = cand.select($"qid", $"vid", $"rel", $"rel".as("score"))
       .withColumn("pk", row_number().over(wPick)).filter($"pk" === 1)
       .select($"qid", $"vid", $"rel", $"score", lit(1L).as("pick"))
-    var selected = first.localCheckpoint(eager = false)
+    var selected = Pinned.pin(first)
     (2 to MmrPicks).foreach { k =>
       val pick = cand
         .join(selected.select($"qid", $"vid"), Seq("qid", "vid"), "anti")
@@ -7579,7 +7536,7 @@ object LlmOps {
           (lit(0.5) * $"rel" - lit(0.5) * $"ms").as("score"))
         .withColumn("pk", row_number().over(wPick)).filter($"pk" === 1)
         .select($"qid", $"vid", $"rel", $"score", lit(k.toLong).as("pick"))
-      selected = selected.unionAll(pick).localCheckpoint(eager = false)
+      selected = Pinned.pin(selected.unionAll(pick))
     }
     selected
       .select($"qid", $"pick", $"vid", $"rel".as("rel_cos"),
@@ -7673,16 +7630,15 @@ object LlmOps {
     import s.implicits._
     val d38 = DecimalType(38, 0)
     val domain = Seq("en", "es", "de", "fr")
-    val all = markerScoredAll(s, dir)
-      .select($"lang", $"predicted", $"s_tot")
-      .localCheckpoint(eager = false) // read by the census AND the exclusion counts
+    val all = Pinned.pin(markerScoredAll(s, dir)
+      .select($"lang", $"predicted", $"s_tot")) // read by the census AND the exclusion counts
     val excl = all.agg(
       sum(when($"s_tot" === 0L, 1L).otherwise(0L)).as("n_unscored"),
       sum(when($"s_tot" > 0L && !$"lang".isin(domain: _*), 1L)
         .otherwise(0L)).as("n_foreign"))
-    val cells = all.filter($"s_tot" > 0L && $"lang".isin(domain: _*))
-      .groupBy($"lang", $"predicted").agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(eager = false) // read by margins + totals + rows
+    // read by margins + totals + rows
+    val cells = Pinned.pin(all.filter($"s_tot" > 0L && $"lang".isin(domain: _*))
+      .groupBy($"lang", $"predicted").agg(count(lit(1)).as("n_docs")))
     val margins = cells.groupBy($"lang").agg(sum($"n_docs").as("rk"))
       .join(cells.groupBy($"predicted").agg(sum($"n_docs").as("ck")),
         $"lang" === $"predicted", "full")
@@ -7947,8 +7903,8 @@ object LlmOps {
     val exactTop = topIds(broadcast(q).join(c, $"qid" =!= $"vid")
       .withColumn("cos", graft.operators.VectorOps.cosine(s)($"qe", $"ve")))
       .select($"qid", $"ids".as("s_ids"))
-    val proj = jlProjected(s, dir, JlDims).select($"vec_id", $"p")
-      .localCheckpoint(eager = false) // read by the panel AND corpus sides
+    // read by the panel AND corpus sides
+    val proj = Pinned.pin(jlProjected(s, dir, JlDims).select($"vec_id", $"p"))
     val qp = proj.filter($"vec_id" < IrEvalQueries)
       .select($"vec_id".as("qid"), $"p".as("pq"))
     val cp = proj.select($"vec_id".as("vid"), $"p".as("pv"))
@@ -8005,23 +7961,23 @@ object LlmOps {
       .select($"w",
         floor(least(lit(1.0), sqrt(lit(0.001) / $"z") + (lit(0.001) / $"z"))
           * lit(16777216.0)).cast("long").as("keep_below"))
-    val kept = toks
+    // read by the pair explode + totals
+    val kept = Pinned.pin(toks
       .join(broadcast(thr), "w")
       .filter(conv(substring(md5(concat($"doc_id".cast("string"), lit(":"),
         $"pos".cast("string"))), 1, 6), 16, 10).cast("long") < $"keep_below")
       .groupBy($"doc_id")
-      .agg(sort_array(collect_list(struct($"pos", $"w"))).as("ks"))
-      .localCheckpoint(eager = false) // read by the pair explode + totals
+      .agg(sort_array(collect_list(struct($"pos", $"w"))).as("ks")))
     // ordered pairs at compacted distance 1..2, emitted in BOTH
     // directions (skip-gram's symmetric context window)
     val pairs = kept.select(explode(flatten(transform($"ks", (x, i) =>
         transform(slice($"ks", i + 2, lit(2)),
           y => struct(x.getField("w").as("a"), y.getField("w").as("b")))))).as("p"))
       .select($"p.a".as("a"), $"p.b".as("b"))
-    val census = pairs.select($"a".as("center"), $"b".as("context"))
+    // read by top-30 + the pair total
+    val census = Pinned.pin(pairs.select($"a".as("center"), $"b".as("context"))
       .unionAll(pairs.select($"b".as("center"), $"a".as("context")))
-      .groupBy($"center", $"context").agg(count(lit(1)).as("n_pairs"))
-      .localCheckpoint(eager = false) // read by top-30 + the pair total
+      .groupBy($"center", $"context").agg(count(lit(1)).as("n_pairs")))
     val stats = toks.agg(count(lit(1)).as("n_occurrences"))
       .crossJoin(kept.agg(
         coalesce(sum(size($"ks")), lit(0)).cast("long").as("n_kept")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Multimodal
+import graft.operators.{Multimodal, Pinned}
 
 /** Declared MULTIMODAL queries — the binary-column path under the
   * driver's oracle gate, not just specs. The codecs are the real JDK
@@ -311,11 +311,10 @@ object Media {
       .select($"p_partkey", enc($"p_partkey").as("png"))
       .select($"p_partkey", dhash($"png").as("dhash"),
         ($"p_partkey" % 3).as("variant"))
-    val clusters = hashed.groupBy($"dhash")
+    val clusters = Pinned.pin(hashed.groupBy($"dhash")
       .agg(count(lit(1)).as("n_parts"),
         countDistinct($"variant").as("n_variants"),
-        min($"p_partkey").as("first_part"))
-      .localCheckpoint(eager = false) // read by rows + riding totals
+        min($"p_partkey").as("first_part"))) // read by rows + riding totals
     val tot = clusters.agg(count(lit(1)).as("n_clusters"),
       sum($"n_parts").as("n_parts_total"))
     clusters.crossJoin(broadcast(tot))
@@ -406,11 +405,10 @@ object Media {
       .select($"c_custkey", enc($"c_custkey").as("wav"))
       .select($"c_custkey", fp($"wav").as("fp"),
         ($"c_custkey" % 3).as("variant"))
-    val clusters = hashed.groupBy($"fp")
+    val clusters = Pinned.pin(hashed.groupBy($"fp")
       .agg(count(lit(1)).as("n_clips"),
         countDistinct($"variant").as("n_variants"),
-        min($"c_custkey").as("first_cust"))
-      .localCheckpoint(eager = false) // read by rows + riding totals
+        min($"c_custkey").as("first_cust"))) // read by rows + riding totals
     val tot = clusters.agg(count(lit(1)).as("n_clusters"),
       sum($"n_clips").as("n_clips_total"))
     clusters.crossJoin(broadcast(tot))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.Tables
+import graft.operators.Pinned
 import Portable._
 
 /** Join / sort / limit / set-operation surface (SURVEY.md §2.B).
@@ -1545,7 +1546,7 @@ object Relational {
       // column pruning specializes each per-column select into its own
       // agg-over-scan subtree and the table is scanned per column again
       val one =
-        if (cols.size > 1) oneLazy.localCheckpoint(eager = false)
+        if (cols.size > 1) Pinned.pin(oneLazy)
         else oneLazy
       cols.zipWithIndex.map { case ((name, _), k) =>
         one.select(lit(name).as("col_name") +:
@@ -1626,7 +1627,7 @@ object Relational {
     // The v-pin also lands both anti-joins exchange-free.
     val distincts: Map[String, DataFrame] = screened
       .flatMap { case (a, b) => Seq(a, b) }.distinct
-      .map(n => n -> graft.operators.Pinned.partitionedCheckpoint(
+      .map(n => n -> Pinned.partitionedCheckpoint(
         cols(n).distinct(), $"v"))
       .toMap
     val perPairLazy = screened.toSeq.sorted.map { case (an, bn) =>
@@ -1669,7 +1670,7 @@ object Relational {
     val perPair = graft.operators.Pool.runAll(4)(perPairLazy.map {
       case (an, bn, v) => () => {
         s.sparkContext.setJobDescription(s"q303: verdict $an vs $bn")
-        v.localCheckpoint() // eager 1-row pin
+        Pinned.pin(v, eager = true) // 1-row verdict
       }
     })
     // an empty screen (no joinable pair) verifies nothing: zero verdicts
@@ -1801,14 +1802,14 @@ object Relational {
   def kAnonymityCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // 875-row census read twice (rows + global mins): pin, don't recompute
-    val g = Tables.orders(s, dir)
+    // lazy (r20): the broadcast-tot build materializes it; eager paid an
+    // extra action
+    val g = Pinned.pin(Tables.orders(s, dir)
       .join(Tables.customer(s, dir), $"o_custkey" === $"c_custkey")
       .groupBy($"c_nationkey".as("nation"), $"c_mktsegment".as("mktsegment"),
         year($"o_orderdate").as("order_year"))
       .agg(count(lit(1)).as("n_rows"),
-        countDistinct($"o_orderpriority").as("l_div"))
-      .localCheckpoint(eager = false) // lazy (r20): the broadcast-tot
-        // build materializes it; eager paid an extra action
+        countDistinct($"o_orderpriority").as("l_div")))
     val tot = g.agg(min($"n_rows").as("k_anonymity"),
       min($"l_div").as("l_diversity"),
       sum(when($"n_rows" < KAnonK, 1L).otherwise(0L)).as("n_groups_below_k"))
@@ -1851,13 +1852,13 @@ object Relational {
     * decimal(38,0). */
   def tClosenessCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val counts = Tables.orders(s, dir)
+    // read by the global census AND the cell grid (lazy, r20: first reader
+    // materializes)
+    val counts = Pinned.pin(Tables.orders(s, dir)
       .join(Tables.customer(s, dir), $"o_custkey" === $"c_custkey")
       .groupBy($"c_nationkey".as("nation"), $"c_mktsegment".as("mktsegment"),
         year($"o_orderdate").as("order_year"), $"o_orderpriority".as("prio"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // read by the global census AND
-        // the cell grid (lazy, r20: first reader materializes)
+      .agg(count(lit(1)).as("c")))
     val glob = counts.groupBy($"prio").agg(sum($"c").as("g"))
       .withColumn("cum_g", sum($"g").over(Window.orderBy($"prio")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1871,7 +1872,8 @@ object Relational {
     val wCell = Window.partitionBy($"nation", $"mktsegment", $"order_year")
       .orderBy($"prio")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cells = cellTot
+    // read by the rows AND the riding globals (lazy, r20)
+    val cells = Pinned.pin(cellTot
       .crossJoin(broadcast(glob)) // full grid: absent priorities = 0 mass
       .join(counts, Seq("nation", "mktsegment", "order_year", "prio"), "left")
       .withColumn("cum_c", sum(coalesce($"c", lit(0L))).over(wCell))
@@ -1886,9 +1888,7 @@ object Relational {
         when($"m" > 1L, $"emd_num".cast("double") /
           (($"m" - 1L).cast("double") * $"n_rows" * $"n_total"))
           .otherwise(lit(0.0)))
-      .withColumn("above_t", $"t_closeness" > lit(TCloseT))
-      .localCheckpoint(eager = false) // read by the rows AND the riding
-        // globals (lazy, r20)
+      .withColumn("above_t", $"t_closeness" > lit(TCloseT)))
     val tot = cells.agg(max($"t_closeness").as("t_max"),
       sum(when($"above_t", 1L).otherwise(0L)).as("n_cells_above"))
     cells.crossJoin(broadcast(tot))
@@ -2012,7 +2012,7 @@ object Relational {
     val matched = classed.filter($"link_class" === "match")
       .select($"id_a".as("src"), $"id_b".as("dst"))
     // min-label propagation to the fixpoint over matched records only
-    val pairs = graft.operators.Pinned.pin(matched
+    val pairs = Pinned.pin(matched
       .unionAll(matched.select($"dst".as("src"), $"src".as("dst")))
       .distinct())
     val nodes = pairs.select($"src").distinct()
@@ -2026,14 +2026,14 @@ object Relational {
       .withColumn("ent", coalesce($"lab", $"c_custkey"))
     val w = Window.partitionBy($"ent")
       .orderBy(length($"c_name").desc, $"c_custkey".asc)
-    val per = ents.withColumn("rn", row_number().over(w))
+    // read by the census AND the totals
+    val per = Pinned.pin(ents.withColumn("rn", row_number().over(w))
       .groupBy($"ent")
       .agg(count(lit(1)).as("n_records"),
         max($"bal_c").as("golden_bal"),
         max(when($"rn" === 1, length($"c_name").cast("long")))
           .as("golden_name_len"),
-        max(when($"rn" === 1, $"c_custkey")).as("survivor_key"))
-      .localCheckpoint(eager = false) // read by the census AND the totals
+        max(when($"rn" === 1, $"c_custkey")).as("survivor_key")))
     val tot = per.agg(sum($"n_records").as("n_records_total"),
       count(lit(1)).as("n_entities_total"))
       .select($"n_records_total", $"n_entities_total",
@@ -2149,11 +2149,11 @@ object Relational {
     * beyond, promote the products to decimal before the one divide. */
   def aprioriRules(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baskets = Tables.lineitem(s, dir)
+    // read by N + L1 + pairs + triples
+    val baskets = Pinned.pin(Tables.lineitem(s, dir)
       .join(broadcast(Tables.part(s, dir).select($"p_partkey", $"p_brand")),
         $"l_partkey" === $"p_partkey")
-      .groupBy($"l_orderkey").agg(sort_array(collect_set($"p_brand")).as("bs"))
-      .localCheckpoint(eager = false) // read by N + L1 + pairs + triples
+      .groupBy($"l_orderkey").agg(sort_array(collect_set($"p_brand")).as("bs")))
     val nDf = baskets.agg(count(lit(1)).as("n_baskets"))
     // ALL three itemset censuses in ONE pass: within-row combinations
     // (slice from the element AFTER each pick) for arities 1–3, tagged
@@ -2162,7 +2162,7 @@ object Relational {
     // groupBy (≤ 25 + 300 + 2300 groups at any SF). Three separate
     // explode passes measured 3.6 s at sf0.1/32c; fused ≈ half that.
     val nil = lit(null).cast("string")
-    val combos = baskets.select(explode(concat(
+    val combos = Pinned.pin(baskets.select(explode(concat(
         transform($"bs", x =>
           struct(x.as("i1"), nil.as("i2"), nil.as("i3"))),
         flatten(transform($"bs", (x, i) =>
@@ -2173,8 +2173,7 @@ object Relational {
             transform(slice($"bs", i + j + 3, size($"bs")),
               z => struct(x.as("i1"), y.as("i2"), z.as("i3"))))))))).as("t"))
       .groupBy($"t.i1".as("i1"), $"t.i2".as("i2"), $"t.i3".as("i3"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false) // brand-domain-bounded, read 8×
+      .agg(count(lit(1)).as("c"))) // brand-domain-bounded, read 8×
     val singles = combos.filter($"i2".isNull)
       .select($"i1".as("item"), $"c".as("c_item"))
     val pairs = combos.filter($"i2".isNotNull && $"i3".isNull)

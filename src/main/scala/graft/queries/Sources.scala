@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.operators.Pinned
 import Portable._
 
 /** Source/sink surface (SURVEY.md §2.B "Scans / sources / sinks") plus the
@@ -621,13 +622,13 @@ object Sources {
     // INDEPENDENT jobs over the pinned cells, so they run concurrently
     // from a small thread pool (guide §2.6 — the later writes back-fill
     // the earlier writes' task tails; job descriptions are thread-local).
-    val ext = li.agg(
+    // Eager on purpose: the 3 pool threads below read both pins
+    // concurrently, so they are materialized before the threads race.
+    val ext = Pinned.pin(li.agg(
       min($"l_orderkey").as("loO"), max($"l_orderkey").as("hiO"),
       min($"l_partkey").as("loP"), max($"l_partkey").as("hiP"),
-      min($"l_suppkey").as("loS"), max($"l_suppkey").as("hiS"))
-      .localCheckpoint() // EAGER on purpose: the 3 pool threads below
-        // read it concurrently — materialize before they race
-    val cells = li.join(broadcast(ext))
+      min($"l_suppkey").as("loS"), max($"l_suppkey").as("hiS")), eager = true)
+    val cells = Pinned.pin(li.join(broadcast(ext))
       .withColumn("fO",
         expr("((l_orderkey - loO) * 16) div (hiO - loO + 1)").cast("int"))
       .withColumn("fP",
@@ -637,8 +638,7 @@ object Sources {
       .withColumn("fZ",
         shiftright(graft.operators.Bucketing.mortonInterleave($"cp", $"cs"), 28)
           .cast("int"))
-      .select($"l_partkey", $"l_suppkey", $"pc", $"fO", $"fP", $"fZ")
-      .localCheckpoint() // EAGER on purpose: see extents pin above
+      .select($"l_partkey", $"l_suppkey", $"pc", $"fO", $"fP", $"fZ"), eager = true)
     graft.operators.Pool.runAll(3)(
       Seq("linear" -> "fO", "range" -> "fP", "zorder" -> "fZ").map {
         case (name, fidCol) => () =>

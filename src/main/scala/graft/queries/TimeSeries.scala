@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Pinned
 import Portable._
 
 /** Time-series operators: calendar-spine gap fill, forward-fill (LOCF)
@@ -998,11 +999,11 @@ object TimeSeries {
     // partitioning), so the keyed pin's repartition was a redundant
     // ledger-sized shuffle; `bounds` keeps the keyed pin — its distinct
     // tail is hash(sk, b), which does NOT satisfy the sk consumers.
-    val rec = graft.operators.Pinned.checkpointAsIs(
+    val rec = Pinned.checkpointAsIs(
       ledger(1995).withColumn("cum", sum($"qty").over(wCum)), "sk")
-    val iss = graft.operators.Pinned.checkpointAsIs(
+    val iss = Pinned.checkpointAsIs(
       ledger(1996).withColumn("cum", sum($"qty").over(wCum)), "sk")
-    val bounds = graft.operators.Pinned.partitionedCheckpoint(
+    val bounds = Pinned.partitionedCheckpoint(
       rec.select($"sk", $"cum".as("b"))
         .unionAll(iss.select($"sk", $"cum".as("b"))).distinct(), $"sk")
     // LOCF as-of: covering row = smallest cum ≥ b. In (cum DESC, tag ASC)
@@ -1212,20 +1213,20 @@ object TimeSeries {
         count(lit(1)).as("tot"))
     val w = Window.orderBy($"t")
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val risk = census
+    // read by the fold + the output
+    val risk = Pinned.pin(census
       .withColumn("n_a", sum($"tot_a").over(w))
       .withColumn("n", sum($"tot").over(w))
-      .filter($"d" > 0L) // the test reads only event times
-      .localCheckpoint(eager = false) // read by the fold + the output
+      .filter($"d" > 0L)) // the test reads only event times
     val eA = ($"d".cast(d38) * $"n_a").cast("double") / $"n".cast("double")
     val vT = when($"n" > 1L,
       ($"d".cast(d38) * $"n_a").cast("double") / $"n".cast("double") *
         (($"n" - $"n_a").cast("double") / $"n".cast("double")) *
         (($"n" - $"d").cast("double") / ($"n" - 1L).cast("double")))
       .otherwise(lit(0.0))
-    val rows = risk.select($"t", $"n_a", $"n", $"d_a", $"d",
-      eA.as("e_a"), vT.as("v_t"), ($"d_a".cast("double") - eA).as("oe"))
-      .localCheckpoint(eager = false) // read by the fold + the output
+    // read by the fold + the output
+    val rows = Pinned.pin(risk.select($"t", $"n_a", $"n", $"d_a", $"d",
+      eA.as("e_a"), vT.as("v_t"), ($"d_a".cast("double") - eA).as("oe")))
     val pooled = rows
       .agg(sort_array(collect_list(struct($"t", $"oe", $"v_t"))).as("xs"))
       .select(
@@ -1276,14 +1277,14 @@ object TimeSeries {
     import s.implicits._
     val mx = Tables.orders(s, dir)
       .agg(max(to_date($"o_orderdate")).as("mday"))
-    Tables.orders(s, dir)
+    // read by pair sides + residuals
+    Pinned.pin(Tables.orders(s, dir)
       .crossJoin(broadcast(mx))
       .filter(to_date($"o_orderdate") >=
         date_sub($"mday", TheilSenWindowDays - 1))
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(cents($"o_totalprice")).as("rev"),
-        max(date_sub($"mday", TheilSenWindowDays - 1)).as("anchor"))
-      .localCheckpoint(eager = false) // read by pair sides + residuals
+        max(date_sub($"mday", TheilSenWindowDays - 1)).as("anchor")))
   }
 
   def theilSenTrend(s: SparkSession, dir: String): DataFrame = {
@@ -1300,8 +1301,8 @@ object TimeSeries {
       .join(broadcast(daily.select($"day".as("db"), $"rev".as("rb"))),
         $"da" < $"db")
       .select(ratio($"rb" - $"ra", datediff($"db", $"da")).as("slope"))
-    val slopeM = lowerMedian(slopes, "slope", "slope", "n_pairs")
-      .localCheckpoint(eager = false) // read by residuals + output
+    // read by residuals + output
+    val slopeM = Pinned.pin(lowerMedian(slopes, "slope", "slope", "n_pairs"))
     val resid = daily.crossJoin(broadcast(slopeM))
       .select(($"rev".cast("double") -
         $"slope" * datediff($"day", $"anchor").cast("double")).as("resid"))
@@ -1392,13 +1393,12 @@ object TimeSeries {
   def pettittChangepoint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val daily = windowedDaily(s, dir)
-    val pairs = daily.select($"day".as("da"), $"rev".as("ra"))
+    val pairs = Pinned.pin(daily.select($"day".as("da"), $"rev".as("ra"))
       .join(broadcast(daily.select($"day".as("db"), $"rev".as("rb"))),
         $"da" < $"db")
       .select($"da", $"db",
         when($"rb" > $"ra", 1L).when($"rb" < $"ra", -1L).otherwise(0L)
-          .as("sg"))
-      .localCheckpoint(eager = false) // read by BOTH endpoint censuses
+          .as("sg"))) // read by BOTH endpoint censuses
     val bPer = pairs.groupBy($"da".as("day")).agg(sum($"sg").as("b_t"))
     val aPer = pairs.groupBy($"db".as("day")).agg(sum($"sg").as("a_t"))
     val nd = daily.agg(count(lit(1)).as("n"),
@@ -1455,24 +1455,22 @@ object TimeSeries {
     val d38 = DecimalType(38, 0)
     val mx = Tables.orders(s, dir)
       .agg(max(to_date($"o_orderdate")).as("mday"))
-    val base = Tables.orders(s, dir)
+    val base = Pinned.pin(Tables.orders(s, dir)
       .crossJoin(broadcast(mx))
       .filter(to_date($"o_orderdate") >= date_sub($"mday", HaarWindowDays - 1))
       .groupBy(datediff(to_date($"o_orderdate"),
         date_sub($"mday", HaarWindowDays - 1)).cast("long").as("i"))
-      .agg(sum(cents($"o_totalprice")).as("v"))
-      .localCheckpoint(eager = false) // read by the ladder AND totals
+      .agg(sum(cents($"o_totalprice")).as("v"))) // read by the ladder AND totals
     val tot = base.agg(count(lit(1)).as("n_days"),
       coalesce(sum($"v"), lit(0L)).as("s_tot"),
       coalesce(sum($"v".cast(d38) * $"v"), lit(BigDecimal(0)).cast(d38))
         .as("e0"))
     var cur = base
     val levels = (1 to 8).map { l =>
-      val nxt = cur.groupBy(expr("i div 2").as("i2"))
+      val nxt = Pinned.pin(cur.groupBy(expr("i div 2").as("i2"))
         .agg(sum(when($"i" % 2 === 0L, $"v").otherwise(-$"v")).as("d"),
           sum($"v").as("sv"))
-        .select($"i2".as("i"), $"d", $"sv".as("v"))
-        .localCheckpoint(eager = false) // read by the energy agg + level l+1
+        .select($"i2".as("i"), $"d", $"sv".as("v"))) // read by the energy agg + level l+1
       val e = nxt
         .agg(coalesce(sum($"d".cast(d38) * $"d"),
           lit(BigDecimal(0)).cast(d38)).as("energy"))
@@ -1513,10 +1511,10 @@ object TimeSeries {
     * bounded pair join → 7 rows. */
   def seasonalMannKendall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = windowedDaily(s, dir)
+    // read by pair sides + ties + counts
+    val daily = Pinned.pin(windowedDaily(s, dir)
       .withColumn("dow",
-        pmod(datediff($"day", lit("1970-01-01")), lit(7)).cast("long"))
-      .localCheckpoint(eager = false) // pair sides + ties + counts
+        pmod(datediff($"day", lit("1970-01-01")), lit(7)).cast("long")))
     val sp = daily.select($"dow", $"day".as("da"), $"rev".as("ra"))
       .join(broadcast(daily.select($"dow", $"day".as("db"),
         $"rev".as("rb"))), Seq("dow"))
@@ -1528,11 +1526,10 @@ object TimeSeries {
       .groupBy($"dow")
       .agg(coalesce(sum($"t" * ($"t" - 1L) * (lit(2L) * $"t" + 5L)),
         lit(0L)).as("tie_d"), sum($"t").as("n_d"))
-    val per = tie.join(sp, Seq("dow"), "left")
+    val per = Pinned.pin(tie.join(sp, Seq("dow"), "left")
       .select($"dow", $"n_d", coalesce($"s_d", lit(0L)).as("s_d"),
         ($"n_d" * ($"n_d" - 1L) * (lit(2L) * $"n_d" + 5L) - $"tie_d")
-          .as("var18_d"))
-      .localCheckpoint(eager = false) // read by the pool AND the rows
+          .as("var18_d"))) // read by the pool AND the rows
     val pool = per.agg(sum($"n_d").as("n_days"), sum($"s_d").as("s_tot"),
       sum($"var18_d").as("var18_tot"))
     val sd = sqrt($"var18_tot".cast("double") / lit(18.0))
@@ -1570,10 +1567,9 @@ object TimeSeries {
   def runsTestDaily(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val daily = Tables.orders(s, dir)
+    val daily = Pinned.pin(Tables.orders(s, dir)
       .groupBy(to_date($"o_orderdate").as("day"))
-      .agg(sum(cents($"o_totalprice")).as("rev"))
-      .localCheckpoint(eager = false) // read by the census AND the signs
+      .agg(sum(cents($"o_totalprice")).as("rev"))) // read by the census AND the signs
     val cums = daily.groupBy($"rev").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum($"cnt").over(Window.orderBy($"rev")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1631,15 +1627,13 @@ object TimeSeries {
   def wilcoxonSignedRank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d38 = DecimalType(38, 0)
-    val daily = Tables.orders(s, dir)
+    val daily = Pinned.pin(Tables.orders(s, dir)
       .groupBy(to_date($"o_orderdate").as("day"))
-      .agg(sum(cents($"o_totalprice")).as("rev"))
-      .localCheckpoint(eager = false) // both pairing sides
-    val pairs = daily
+      .agg(sum(cents($"o_totalprice")).as("rev"))) // both pairing sides
+    val pairs = Pinned.pin(daily
       .join(daily.select(date_add($"day", 7).as("day"),
         $"rev".as("prev_rev")), Seq("day"))
-      .select(($"rev" - $"prev_rev").as("dcents"))
-      .localCheckpoint(eager = false) // read by counts AND the census
+      .select(($"rev" - $"prev_rev").as("dcents"))) // read by counts AND the census
     val pc = pairs.agg(count(lit(1)).as("n_pairs"),
       coalesce(sum(when($"dcents" === 0L, 1L).otherwise(0L)), lit(0L))
         .as("n_zero"))
@@ -1794,15 +1788,14 @@ object TimeSeries {
     val daily = Tables.orders(s, dir)
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(cents($"o_totalprice")).as("rev"))
-    val folded = daily
+    val folded = Pinned.pin(daily
       .agg(sort_array(collect_list(struct($"day", $"rev"))).as("ds"))
       .select(transform($"ds", x => x.getField("rev")).as("xs"))
       .select($"xs", size($"xs").cast("long").as("n"),
         aggregate($"xs", lit(0L), (a, v) => a + v).as("s"))
       // centered terms scaled by n: c_t = n·x_t − S (exact longs to
       // ~10¹⁴ total cents at 10⁵ days; the fold below runs in decimal)
-      .select($"n", transform($"xs", v => ($"n" * v - $"s")).as("cs"))
-      .localCheckpoint(eager = false) // read once per lag
+      .select($"n", transform($"xs", v => ($"n" * v - $"s")).as("cs"))) // read once per lag
     val den = folded.select($"n",
       aggregate($"cs", lit(BigDecimal(0)).cast(d38),
         (a, c) => a + c.cast(d38) * c).as("var_n2"))
@@ -2221,12 +2214,11 @@ object TimeSeries {
             (element_at(acc, k).getField("v") * (lit(1.0) - a * a))
               .as("v"))))
         }).as("ladder"))
-    val ex = ladder.select($"n", explode($"ladder").as("e"))
+    val ex = Pinned.pin(ladder.select($"n", explode($"ladder").as("e"))
       .select($"e.k".as("order_k"), $"n", $"e.pacf".as("pacf"),
         $"e.v".as("sigma2_ratio"),
         ($"e.v" * (($"n" + $"e.k" + 1L).cast("double") /
-          ($"n" - $"e.k" - 1L).cast("double"))).as("fpe_rel"))
-      .localCheckpoint(eager = false) // read by the argmin AND the rows
+          ($"n" - $"e.k" - 1L).cast("double"))).as("fpe_rel"))) // read by the argmin AND the rows
     val mn = ex.agg(min($"fpe_rel").as("mn"))
     val selK = ex.crossJoin(broadcast(mn)).filter($"fpe_rel" === $"mn")
       .agg(min($"order_k").as("sel_k"))
@@ -2256,7 +2248,7 @@ object TimeSeries {
     val daily = Tables.orders(s, dir)
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(cents($"o_totalprice")).as("rev"), count(lit(1)).as("cnt"))
-    val folded = daily
+    val folded = Pinned.pin(daily
       .agg(sort_array(collect_list(struct($"day", $"rev", $"cnt"))).as("ds"))
       .select(transform($"ds", x => x.getField("rev")).as("xs"),
         transform($"ds", x => x.getField("cnt")).as("ys"))
@@ -2265,8 +2257,7 @@ object TimeSeries {
         aggregate($"ys", lit(0L), (a, v) => a + v).as("sy"))
       .select($"n",
         transform($"xs", v => ($"n" * v - $"sx")).as("cx"),
-        transform($"ys", v => ($"n" * v - $"sy")).as("cy"))
-      .localCheckpoint(eager = false) // read by the variances + 15 lags
+        transform($"ys", v => ($"n" * v - $"sy")).as("cy"))) // read by the variances + 15 lags
     val den = folded.select(
       aggregate($"cx", lit(BigDecimal(0)).cast(d38),
         (a, c) => a + c.cast(d38) * c).as("varx_n2"),
@@ -2367,7 +2358,7 @@ object TimeSeries {
       .select($"day", expr("revc div 100").as("rev")) // dollar grain
     val arr = daily
       .agg(sort_array(collect_list(struct($"day", $"rev"))).as("xs"))
-    val wins = arr
+    val wins = Pinned.pin(arr
       .select(posexplode(transform(
         sequence(lit(0), greatest(size($"xs") - MotifW, lit(0))),
         i => struct(
@@ -2376,15 +2367,13 @@ object TimeSeries {
             e => e.getField("rev")).as("w")))))
       .filter(size($"col.w") === MotifW) // degenerate short series drop out
       .select($"pos".cast("long").as("i"), $"col.day".as("day"),
-        $"col.w".as("w"))
-      .localCheckpoint(eager = false) // read by both pair-join sides
-    val pairs = wins.select($"i".as("ia"), $"day".as("da"), $"w".as("wa"))
+        $"col.w".as("w"))) // read by both pair-join sides
+    val pairs = Pinned.pin(wins.select($"i".as("ia"), $"day".as("da"), $"w".as("wa"))
       .join(broadcast(wins.select($"i".as("ib"), $"day".as("db"),
         $"w".as("wb"))), $"ib" - $"ia" >= MotifW)
       .select($"ia", $"da", $"ib", $"db",
         aggregate(zip_with($"wa", $"wb", (x, y) => (x - y) * (x - y)),
-          lit(0L), (a, v) => a + v).as("d2"))
-      .localCheckpoint(eager = false) // read by motif argmin + discord
+          lit(0L), (a, v) => a + v).as("d2"))) // read by motif argmin + discord
     val motif = pairs
       .orderBy($"d2".asc, $"ia".asc, $"ib".asc).limit(1)
       .select(lit("motif").as("kind"), $"ia".as("i"), $"da".as("day_i"),
@@ -2430,7 +2419,7 @@ object TimeSeries {
     // series is shorter than one full window
     val idxs = when(size($"xs") >= 7, sequence(lit(3), size($"xs") - 4))
       .otherwise(expr("CAST(array() AS array<int>)"))
-    val base = arr
+    val base = Pinned.pin(arr
       .select(posexplode(transform(idxs,
         i => struct(
           element_at($"xs", i + 1).getField("day").as("day"),
@@ -2441,8 +2430,7 @@ object TimeSeries {
       .select($"col.day".as("day"), $"col.rev".as("rev"),
         $"col.trend".as("trend"))
       .withColumn("dow", dayofweek($"day").cast("long"))
-      .withColumn("detr", $"rev".cast("double") - $"trend")
-      .localCheckpoint(eager = false) // read by the dow medians + output
+      .withColumn("detr", $"rev".cast("double") - $"trend")) // read by the dow medians + output
     val dowMed = base.groupBy($"dow")
       .agg(sort_array(collect_list($"detr")).as("ds"))
       .select($"dow", element_at($"ds",

@@ -855,4 +855,52 @@ class PlanAssertionsSpec extends SparkSpec {
         s"$q: per-layer anti-join chain reappeared (pair-state regression):\n$p")
     }
   }
+
+  /** Grouping-key names of each aggregate in `a`. */
+  private def keyNames(a: org.apache.spark.sql.catalyst.plans.logical.Aggregate): Seq[String] =
+    a.groupingExpressions.map {
+      case n: org.apache.spark.sql.catalyst.expressions.NamedExpression => n.name
+      case e => e.sql
+    }
+
+  /** The aggregates of each pin `name` builds (a pinned subplan is not in
+    * the query's own plan), then of the query's own plan, as analyzed —
+    * the same captures `PinPlans` writes to `plans/pins`. */
+  private def aggregatesByPlan(name: String) = {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val (df, pins) = PinPlans.of(spark)(SparkEntry.queries(name)(spark, sfDir))
+    (pins.map(_.analyzed) :+ df.queryExecution.analyzed)
+      .map(_.collect { case a: Aggregate => a })
+  }
+
+  test("q290 folds the packed bottleneck array keyed on node, never on (seed, node)") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Max
+    val aggs = aggregatesByPlan("q290_widest_path_census").flatten
+    assert(!aggs.exists(a => Set("seed", "node").subsetOf(keyNames(a).toSet)),
+      "a per-(seed, node) pair fold is back")
+    val folds = aggs.filter(a => keyNames(a) == Seq("node"))
+    assert(folds.size == 3, "one node-keyed fold per relaxation hop")
+    folds.foreach { a =>
+      assert(a.aggregateExpressions.flatMap(_.collect { case m: Max => m }).size ==
+        graft.queries.Graph.SeedPanelK, "one max per seed slot")
+    }
+  }
+
+  for (name <- Seq("q294_label_propagation", "q380_modularity_census"))
+    test(s"$name folds each vote round in exactly one vnode-keyed aggregate") {
+      import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+      val plans = aggregatesByPlan(name)
+      val votes = plans.flatten.filter(a => keyNames(a).contains("vnode"))
+      assert(votes.size == 3 && votes.forall(a => keyNames(a) == Seq("vnode")),
+        s"want one vnode-keyed vote fold per round, got ${votes.map(keyNames)}")
+      votes.foreach { a =>
+        assert(a.aggregateExpressions.flatMap(_.collect { case m: Sum => m }).size ==
+          graft.queries.Graph.LpLabelK, "one packed counter per label")
+      }
+      // each round sits in its own plan; rounds 1 and 2 are pinned alone
+      // (in build order), so their plans hold no second keyed aggregate
+      val rounds = plans.filter(_.exists(a => keyNames(a) == Seq("vnode")))
+      assert(rounds.size == 3)
+      assert(rounds.take(2).map(_.size) == Seq(1, 1))
+    }
 }
