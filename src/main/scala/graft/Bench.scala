@@ -1,6 +1,17 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.Pinned
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.{GraftListenerBus, SparkContext}
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
+
+/** Times the declared queries (`SPARK_GRAFT_BENCH_ONLY`, comma-separated;
+  * unset or empty = all) at `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_BENCH_ITERS`
+  * samples each (default 3), and prints the total of per-query medians as
+  * one JSON line, also written to `SPARK_GRAFT_BENCH_OUT` (default
+  * `bench_out.json`). Each query's layers (median wall, jobs, stages,
+  * tasks, task and GC seconds, shuffle and spill MB, failure root cause)
+  * go to the same path with `.json` replaced by `.layers.json`. */
 object Bench {
   /** Execute the query's REAL plan: a noop-format write runs the full
     * executed plan — final sorts, wide projections, everything Verify
@@ -10,97 +21,128 @@ object Bench {
   private def exec(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Optional comma-separated query filter (e.g. the sf1 soak runs just
-    // the fact-table join/agg subset); empty/unset = the full set.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queryMap = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
-    // Execution-order mode (SPARK_GRAFT_BENCH_ORDER): "declared" (default;
-    // the registry Map's iteration order — what every prior round's
-    // artifact used), "reverse" (the exact same sequence reversed), or
-    // "shuffle:<seed>" (deterministic Fisher-Yates). The reverse mode is
-    // the variance experiment the r13 verdict asked for: full-run
-    // per-query inflation vs a focused run either follows POSITION
-    // (late-running queries inflate regardless of which they are — the
-    // JVM-context-floor hypothesis: code cache/GC/cleaner debt grows with
-    // queries run) or follows the QUERY (a query is slow wherever it
-    // runs — real plan cost). Running both orders and correlating
-    // per-query deltas against position separates the two mechanically.
-    val queries: Seq[(String, (SparkSession, String) => DataFrame)] = {
-      val declared = queryMap.toSeq
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "declared") match {
-        case "declared" => declared
-        case "reverse" => declared.reverse
-        case s if s.startsWith("shuffle:") =>
-          new scala.util.Random(s.stripPrefix("shuffle:").toLong)
-            .shuffle(declared)
-        case other => sys.error(s"unknown SPARK_GRAFT_BENCH_ORDER: $other")
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** Scheduler counters of the run since the last [[reset]]. Both reads
+    * drain the listener bus first, so a finished action's trailing stage
+    * and task events are counted; they run outside the timed region. */
+  private[graft] class Layers(sc: SparkContext) extends SparkListener {
+    private val jobs, stages, tasks, taskMs, gcMs, shuffleBytes, spillBytes = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      val m = s.stageInfo.taskMetrics
+      if (m != null) {
+        shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
+        spillBytes.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
       }
     }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (t.taskMetrics != null) {
+        taskMs.addAndGet(t.taskMetrics.executorRunTime)
+        gcMs.addAndGet(t.taskMetrics.jvmGCTime)
+      }
+    }
+    def reset(): Unit = {
+      GraftListenerBus.drain(sc)
+      Seq(jobs, stages, tasks, taskMs, gcMs, shuffleBytes, spillBytes).foreach(_.set(0))
+    }
+    /** Values of [[Layers.fields]], in that order. */
+    def snapshot(): Seq[Double] = {
+      GraftListenerBus.drain(sc)
+      Seq(jobs.get.toDouble, stages.get.toDouble, tasks.get.toDouble, taskMs.get / 1e3,
+        gcMs.get / 1e3, shuffleBytes.get / 1e6, spillBytes.get / 1e6)
+    }
+  }
+  private[graft] object Layers {
+    val fields = Seq("jobs", "stages", "tasks", "task_s", "gc_s", "shuffle_mb", "spill_mb")
+  }
+
+  private case class Sample(name: String, wall: Either[String, Double], layers: Seq[Double])
+  private case class Record(name: String, wall: Option[Double], layers: Seq[Double],
+      failure: Option[String])
+
+  /** `d` rounded to 6 decimals, without trailing zeros (counts print as integers). */
+  private def num(d: Double): String =
+    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal.stripTrailingZeros.toPlainString
+
+  private def write(path: String, text: String): Unit =
+    try Files.writeString(Paths.get(path), text + "\n")
+    catch { case e: Throwable => System.err.println(s"[bench] write $path: ${Harness.rootCause(e)}") }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val queries = Harness.selectFromEnv("SPARK_GRAFT_BENCH_ONLY")
+    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     val spark = GraftSession.create()
+    val layers = new Layers(spark.sparkContext)
+    spark.sparkContext.addSparkListener(layers)
     // Warm-up: run the whole set once at the smallest SF so the timed pass
     // below measures query execution, not JVM JIT + whole-stage-codegen
     // compilation (the generated code is cached by source, so same-shaped
     // plans at the target SF hit the cache).
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      queries.foreach { case (_, fn) =>
-        try exec(fn(spark, warmDir)) catch { case _: Throwable => () }
-        Pinned.release(spark)
-      }
+      Harness.runEach(spark, queries, "warm-up")((_, fn) => exec(fn(spark, warmDir)))
     // n timed iterations per query, report the per-query MEDIAN and the
     // total of medians: single-shot timings on this box show ±3× jitter on
     // sub-second queries (JIT / GC / noisy neighbors), which manufactured
     // phantom per-query "regressions" in earlier round artifacts. The
     // median of 3 is robust to one bad sample while keeping the full-set
     // runtime ~3× one pass.
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    // iterate over the whole set per pass (not per-query back-to-back) so
-    // a pass-wide disturbance lands in one sample per query, not all three
+    // Iterate over the whole set per pass (not per-query back-to-back) so
+    // a pass-wide disturbance lands in one sample per query, not all three.
     val samples = (1 to iters).flatMap { _ =>
       queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { exec(fn(spark, sfDir)); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        Pinned.release(spark) // hygiene is not part of the query's time
-        (name, dt, ok)
+        layers.reset()
+        val wall = Harness.runOne(spark, name, "bench") {
+          val t0 = System.nanoTime()
+          exec(fn(spark, sfDir))
+          (System.nanoTime() - t0) / 1e9
+        } // the failure log, the release and the drain run after the clock stops
+        Sample(name, wall, layers.snapshot())
       }
     }
-    val byQuery = samples.groupBy(_._1)
+    val byQuery = samples.groupBy(_.name)
     // Median over SUCCESSFUL samples only: a query that crashes in 1 of n
     // runs must not have its time-to-failure mixed into the median (that
     // silently skews the artifact even though the query is listed in
     // `failed`). A query with zero successful samples reports null and is
-    // excluded from the total — the `failed` list is its record.
-    val medians = queries.map { case (name, _) =>
-      val ok = byQuery(name).filter(_._3).map(_._2)
-      name -> (if (ok.nonEmpty) Some(median(ok)) else None)
+    // excluded from the total — the `failed` list is its record. Layer
+    // counters are medians over the same samples (all of them if none
+    // succeeded).
+    val records = queries.map { case (name, _) =>
+      val ss = byQuery(name)
+      val walls = ss.flatMap(_.wall.toOption)
+      val counted = if (walls.nonEmpty) ss.filter(_.wall.isRight) else ss
+      Record(name, if (walls.nonEmpty) Some(median(walls)) else None,
+        Layers.fields.indices.map(i => median(counted.map(_.layers(i)))),
+        ss.collectFirst { case Sample(_, Left(cause), _) => cause })
     }
-    val qs = medians.map { case (k, v) => s"\"" + k + "\":" + v.fold("null")(_.toString) }
+    val qs = records.map(r => s"\"" + r.name + "\":" + r.wall.fold("null")(_.toString))
       .mkString("{", ",", "}")
-    val failed = byQuery.collect { case (k, ss) if ss.exists(!_._3) => s"\"$k\"" }
+    val failed = records.filter(_.failure.isDefined).map(r => s"\"${r.name}\"")
       .mkString("[", ",", "]")
-    val total = medians.flatMap(_._2).sum
+    val total = records.flatMap(_.wall).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"iters":$iters,"failed":$failed,"sf":"$sfDir"}"""
     println(line)
     // Also land the JSON in a file: the driver greps sbt's log tail for the
     // stdout line, and round 1 showed that parse can fail ("parsed": null).
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] write $outFile: ${e.getMessage}") }
+    write(outFile, line)
+    val perQuery = records.map { r =>
+      val kv = ("wall_s" -> r.wall.fold("null")(num)) +:
+        Layers.fields.zip(r.layers.map(num)) :+
+        ("failure" -> r.failure.fold("null")(Harness.jsonString))
+      Harness.jsonString(r.name) + ":" + kv.map { case (f, v) => s"\"$f\":$v" }.mkString("{", ",", "}")
+    }
+    write(outFile.stripSuffix(".json") + ".layers.json",
+      s"""{"sf":${Harness.jsonString(sfDir)},"iters":$iters,"queries":""" +
+        perQuery.mkString("{\n", ",\n", "}}"))
     spark.stop()
   }
 }

@@ -14,13 +14,13 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.create(
-      confs = Seq("spark.sql.maxToStringFields" -> "200")) // untruncated plans
-    if (args.headOption.contains("sweep")) { sweep(spark, sfDir); spark.stop(); return }
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+    val sfDir = Harness.sfDir
+    val sweepAll = args.headOption.contains("sweep")
+    val queries = Harness.select(if (sweepAll) Nil else args.toSeq)
+    val spark = GraftSession.create(confs = Harness.planConfs)
+    if (sweepAll) sweep(spark, queries.sortBy(_._1), sfDir) // name order, as in docs/PLANS.md
+    else Harness.runEach(spark, queries, "explain") { (n, fn) =>
+      val df = fn(spark, sfDir)
       df.collect()
       println(s"\n==== $n ====")
       println(df.queryExecution.executedPlan.toString)
@@ -40,7 +40,8 @@ object ExplainAudit {
     * output with the per-hit bounded/unbounded adjudication lives in
     * docs/PLANS.md.
     */
-  private def sweep(spark: SparkSession, sfDir: String): Unit = {
+  private def sweep(spark: SparkSession, queries: Seq[(String, Harness.Query)],
+      sfDir: String): Unit = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -66,31 +67,27 @@ object ExplainAudit {
       "l_linestatus", "c_mktsegment", "o_orderstatus", "lang", "split",
       "event_type", "variant", "label", "n_name", "r_name", "p_brand")
     var hits = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.sparkPlan
-        plan.collect { case w: WindowExec => w }.foreach { w =>
-          val keys = w.partitionSpec.flatMap(_.references.map(_.name)).distinct
-          val global = keys.isEmpty
-          val lowOnly = keys.nonEmpty && keys.forall(lowCard.contains)
-          if (global || lowOnly) {
-            val basis = basisBelow(w.child)
-            // low-card keyed windows are only a finding when the input
-            // is NOT already collapsed to a bounded table
-            if (global || basis == "RAW INPUT") {
-              hits += 1
-              val head = w.windowExpression.map(_.name).mkString(",")
-              val kind = if (global) "global window"
-                         else s"low-card window [${keys.mkString(",")}]"
-              println(s"SWEEP $n: $kind [$head] over $basis")
-            }
+    Harness.runEach(spark, queries, "sweep") { (n, fn) =>
+      val plan = fn(spark, sfDir).queryExecution.sparkPlan
+      plan.collect { case w: WindowExec => w }.foreach { w =>
+        val keys = w.partitionSpec.flatMap(_.references.map(_.name)).distinct
+        val global = keys.isEmpty
+        val lowOnly = keys.nonEmpty && keys.forall(lowCard.contains)
+        if (global || lowOnly) {
+          val basis = basisBelow(w.child)
+          // low-card keyed windows are only a finding when the input
+          // is NOT already collapsed to a bounded table
+          if (global || basis == "RAW INPUT") {
+            hits += 1
+            val head = w.windowExpression.map(_.name).mkString(",")
+            val kind = if (global) "global window"
+                       else s"low-card window [${keys.mkString(",")}]"
+            println(s"SWEEP $n: $kind [$head] over $basis")
           }
         }
-      } catch {
-        case e: Throwable => println(s"SWEEP $n: PLAN ERROR ${e.getMessage}")
       }
     }
     println(s"SWEEP done: $hits window site(s) flagged across " +
-      s"${SparkEntry.queries.size} queries")
+      s"${queries.size} queries")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession factory behind every entry point (Bench,
-  * Verify, Probe, PlanDump, ExplainAudit, Demo) and the test suites, so
+  * Verify, PlanDump, ExplainAudit, Demo) and the test suites, so
   * their defaults cannot drift apart. */
 object GraftSession {
 

@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-import graft.operators.Pinned
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round plan artifacts: write `.explain("formatted")` for the
   * named declared queries (all by default) to <outDir>/<name>_<tag>.txt so
@@ -13,19 +13,14 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r19")
     val tag = args.drop(1).headOption.getOrElse("before")
-    val names = if (args.length > 2) args.drop(2).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.create(
-      confs = Seq("spark.sql.maxToStringFields" -> "200")) // untruncated plans
+    val queries = Harness.select(args.drop(2).toSeq)
+    val sfDir = Harness.sfDir
+    val spark = GraftSession.create(confs = Harness.planConfs)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    Harness.runEach(spark, queries, "plandump") { (n, fn) =>
+      val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${n}_$tag.txt"), txt)
-      Pinned.release(spark) // pins from plan construction must not leak
       println(s"[plandump] wrote $outDir/${n}_$tag.txt")
     }
     spark.stop()

@@ -485,6 +485,19 @@ object Sources {
       .orderBy($"Barrio")
   }
 
+  /** State-partition count for q192's fresh checkpoint. Every state
+    * partition opens its own RocksDB instance per micro-batch: at the
+    * session default (= core count) the three runs paid ~100 store
+    * open/snapshot/close cycles for a dim-bounded keyspace (|users|), and
+    * the per-store fixed cost dominated the query (~80 s of task time,
+    * almost all RocksDB lifecycle). The count is a property of STATE SIZE,
+    * not of the host's cores: a 100 TB deployment sizes it to state-bytes
+    * / target-partition-bytes. Results are partition-count invariant
+    * (update-mode emission is per-user, and the sink is re-read as one
+    * frame), and a streaming partition count is fixed at checkpoint
+    * creation, so all three runs see the same value. */
+  private val TwsStateParts = 4
+
   /** transformWithState — the modern arbitrary-state streaming API —
     * under the driver's hard signal: the batch twin of
     * [[graft.streaming.Streams.userTotalsTws]]. Events are split into
@@ -538,30 +551,7 @@ object Sources {
     // checksum manager's async close can deadlock under load (see
     // StreamsSpec's transformWithState cases)
     s2.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // State-partition count for THIS query's fresh checkpoint
-    // (optimization-round rework, guide §1.2 step 2): every state
-    // partition opens its own RocksDB instance per micro-batch — at the
-    // session default (= core count) the three runs paid ~100 store
-    // open/snapshot/close cycles for a dim-bounded keyspace (|users|),
-    // and the per-store fixed cost dominated the query (~80 s of task
-    // time, almost all RocksDB lifecycle). The count is a property of
-    // STATE SIZE, not of the host's cores, so it is env-parameterized
-    // (SPARK_GRAFT_TWS_STATE_PARTS; a 100 TB deployment sizes it to
-    // state-bytes / target-partition-bytes). Results are partition-count
-    // invariant: update-mode emission is per-user, and the sink is
-    // re-read as one frame. Streaming partition count is fixed at
-    // checkpoint creation, so all three runs see the same value.
-    val twsParts = sys.env.get("SPARK_GRAFT_TWS_STATE_PARTS") match {
-      case None => 4
-      case Some(v) =>
-        val n = scala.util.Try(v.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_TWS_STATE_PARTS must be a positive integer, got '$v'"))
-        require(n > 0,
-          s"SPARK_GRAFT_TWS_STATE_PARTS must be a positive integer, got '$v'")
-        n
-    }
-    s2.conf.set("spark.sql.shuffle.partitions", twsParts.toString)
+    s2.conf.set("spark.sql.shuffle.partitions", TwsStateParts.toString)
     (0 until 3).foreach { k =>
       ev.filter($"event_id" % 3 === k).coalesce(1)
         .write.mode("append").parquet(inDir)

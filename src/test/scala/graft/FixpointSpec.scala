@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestListenerBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
@@ -69,7 +69,7 @@ class FixpointSpec extends SparkSpec {
     sc.setJobGroup(group, "job count")
     try body finally {
       sc.clearJobGroup()
-      TestListenerBus.drain(sc)
+      GraftListenerBus.drain(sc)
       sc.removeSparkListener(listener)
     }
     jobs.get
@@ -109,7 +109,7 @@ class FixpointSpec extends SparkSpec {
     val vocab = Seq(("ab", 5L, " a  b "), ("aab", 1L, " a  a  b "))
       .toDF("w", "freq", "seg")
     val merges = Fixpoint.greedyMerges(vocab, 5, topPair)
-    TestListenerBus.drain(s.sparkContext)
+    GraftListenerBus.drain(s.sparkContext)
     assert(merges.map(m => (m.round, m.pair, m.merged, m.top.getLong(1), m.vocabSyms)) ==
       Seq((1, "a b", "ab", 6L, 2L), (2, "a ab", "aab", 1L, 2L)))
     assert(collects.get == 1 + merges.size) // the first argmax + one gate per round

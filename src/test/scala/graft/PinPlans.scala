@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.TestListenerBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExtendedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -37,7 +37,7 @@ object PinPlans {
     spark.listenerManager.register(listener)
     try {
       val df = build
-      TestListenerBus.drain(spark.sparkContext)
+      GraftListenerBus.drain(spark.sparkContext)
       (df, pins.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
@@ -45,8 +45,7 @@ object PinPlans {
   def main(args: Array[String]): Unit = {
     val outDir = args.head
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", TestSpark.sfDir)
-    val spark = GraftSession.create(
-      confs = Seq("spark.sql.debug.maxToStringFields" -> "200")) // untruncated plans
+    val spark = GraftSession.create(confs = Harness.planConfs)
     Files.createDirectories(Paths.get(outDir))
     args.tail.foreach { name =>
       val (_, pins) = of(spark)(SparkEntry.queries(name)(spark, sfDir))

@@ -7,27 +7,72 @@ each round so "ambient drift" claims point at data, not prose.
 
 Usage: python3 tools/benchdiff.py <new.json> <old.json> [--ratio 2.0] [--abs 0.5]
 
-Accepts either the Bench.scala output shape ({"queries": {...}}) or the
-driver's BENCH_r{N}.json wrapper (whose "tail" holds a truncated JSON
-string — in that case pass the matching bench_out.json instead).
+Accepts the Bench.scala output shape ({"queries": {q: seconds}}) or its
+per-query layer file ({"queries": {q: {"wall_s": ..., "jobs": ...}}},
+written next to it as <name>.layers.json). A round's BENCH_r{N}.json
+wrapper is refused: its "tail" holds a truncated JSON string, so pass
+the matching bench_out.json instead.
 
 Prints: new-only queries (cost of the round's additions), removed
 queries, carried queries whose delta exceeds EITHER threshold (ratio
 or absolute seconds, both directions), and the total decomposition
-new-total = old-total + additions + carried-drift.
+new-total = old-total + additions + carried-drift. Queries with a null
+median (every sample failed) are listed and left out of the sums. Given
+two layer files, the per-query delta of every layer counter (jobs,
+stages, tasks, task_s, gc_s, shuffle_mb, spill_mb) follows, with any
+change in the failure root cause.
 """
 import json
 import sys
 
 
 def load(path):
+    """(walls, layers, failed): median seconds of each query that has one,
+    the per-query layer records or None, and the queries with a null median."""
     with open(path) as f:
         d = json.load(f)
-    if "queries" in d and isinstance(d["queries"], dict):
-        return d["queries"]
-    raise SystemExit(
-        f"{path}: no 'queries' map — pass a bench_out.json, not the "
-        f"driver's BENCH_r wrapper (its 'tail' is truncated)")
+    qs = d.get("queries") if isinstance(d, dict) else None
+    if not isinstance(qs, dict):
+        raise SystemExit(
+            f"{path}: no 'queries' map — pass a bench_out.json, not the "
+            f"BENCH_r wrapper (its 'tail' is truncated)")
+    layers = None
+    if all(isinstance(v, dict) for v in qs.values()):
+        layers, qs = qs, {q: v.get("wall_s") for q, v in qs.items()}
+    walls = {q: v for q, v in qs.items() if v is not None}
+    return walls, layers, sorted(q for q, v in qs.items() if v is None)
+
+
+def layer_rows(new, old):
+    """(query, [(counter, new - old)], (old failure, new failure) or None)
+    for each query in both layer maps, in name order."""
+    rows = []
+    for q in sorted(set(new) & set(old)):
+        counters = [k for k, v in new[q].items()
+                    if k != "wall_s" and isinstance(v, (int, float))
+                    and isinstance(old[q].get(k), (int, float))]
+        deltas = [(k, new[q][k] - old[q][k]) for k in counters]
+        fail = (old[q].get("failure"), new[q].get("failure"))
+        rows.append((q, deltas, fail if fail[0] != fail[1] else None))
+    return rows
+
+
+def print_layers(new, old):
+    rows = layer_rows(new, old)
+    if not rows:
+        print("\nno query has layers on both sides.")
+        return
+    names = [k for k, _ in rows[0][1]]
+    width = max(len(q) for q, _, _ in rows)
+    print("\nper-query layer deltas (new - old):")
+    print(f"  {'query':<{width}}" + "".join(f"  {k:>10}" for k in names))
+    for q, deltas, fail in rows:
+        cells = dict(deltas)
+        print(f"  {q:<{width}}" + "".join(
+            f"  {cells[k]:>+10.3f}" if k in cells else f"  {'-':>10}"
+            for k in names))
+        if fail:
+            print(f"  {'':<{width}}  failure: {fail[0]} -> {fail[1]}")
 
 
 def main():
@@ -55,10 +100,11 @@ def main():
             args.append(toks[i]); i += 1
     if len(args) != 2:
         raise SystemExit(__doc__)
-    new, old = load(args[0]), load(args[1])
+    (new, new_layers, new_failed), (old, old_layers, old_failed) = \
+        load(args[0]), load(args[1])
 
-    added = sorted(set(new) - set(old))
-    removed = sorted(set(old) - set(new))
+    added = sorted(set(new) - set(old) - set(old_failed))
+    removed = sorted(set(old) - set(new) - set(new_failed))
     carried = sorted(set(new) & set(old))
 
     add_cost = sum(new[q] for q in added)
@@ -93,6 +139,11 @@ def main():
             print(f"  {d:+8.2f}  {r:5.2f}x  {old[q]:7.2f}  {new[q]:7.2f}  {q}")
     else:
         print(f"\nno carried query moved more than {abs_thr}s or {ratio_thr}x.")
+    for label, failed in (("new", new_failed), ("old", old_failed)):
+        if failed:
+            print(f"\nfailed in {label} (null median): {', '.join(failed)}")
+    if new_layers is not None and old_layers is not None:
+        print_layers(new_layers, old_layers)
 
 
 if __name__ == "__main__":
